@@ -37,10 +37,6 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--max-depth", type=int, default=4)
     p.add_argument("--round-duration-ms", type=int, default=60_000)
     p.add_argument("--bloom-partitions", type=int, default=64)
-    p.add_argument("--seen-filter", choices=("bloom", "cuckoo"),
-                   default="bloom",
-                   help="URL-seen filter structure; cuckoo supports "
-                        "in-place stale-url eviction")
     p.add_argument("--expire-days", type=int, default=None,
                    help="recrawl expiry: evict+requeue urls whose newest "
                         "stored doc is older than this (default: off)")
@@ -82,7 +78,6 @@ def main(argv: list[str] | None = None) -> int:
         max_depth=args.max_depth,
         round_duration_ms=args.round_duration_ms,
         n_bloom_partitions=args.bloom_partitions,
-        seen_filter=args.seen_filter,
         expire_days=args.expire_days,
     )
     metrics = run_crawl(spark, cfg, pages, seeds, robots,

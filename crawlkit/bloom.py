@@ -65,8 +65,17 @@ class BloomPartition:
 
     @classmethod
     def from_bytes(cls, payload: bytes) -> "BloomPartition":
-        """Layout: 4B k (LE) | 8B n_items (LE) | bit array."""
+        """Layout: 4B k (LE) | 8B n_items (LE) | bit array.
+
+        Rejects payloads no `to_bytes` can produce (k outside 1..16, or
+        no bit array) — e.g. a foreign filter's header, whose k would
+        otherwise size the (k, n) index matrix in `_indexes`."""
         k = int.from_bytes(payload[:4], "little")
+        if not 1 <= k <= 16 or len(payload) <= 12:
+            raise ValueError(
+                f"not a bloom partition payload: k={k}, "
+                f"{max(len(payload) - 12, 0)} bit-array bytes"
+            )
         n_items = int.from_bytes(payload[4:12], "little")
         bits = np.frombuffer(payload[12:], dtype=np.uint8).copy()
         return cls(len(bits) * 8, k, bits, n_items)
@@ -99,19 +108,3 @@ class BloomPartition:
         idx = self._indexes(hashes)  # (k, n)
         bit_set = (self.bits[idx >> 3] >> (idx & 7).astype(np.uint8)) & 1
         return bit_set.all(axis=0).astype(bool)
-
-    def merge(self, other: "BloomPartition") -> "BloomPartition":
-        if other.m_bits != self.m_bits or other.k != self.k:
-            raise ValueError("cannot merge blooms with different geometry")
-        return BloomPartition(
-            self.m_bits,
-            self.k,
-            np.bitwise_or(self.bits, other.bits),
-            self.n_items + other.n_items,
-        )
-
-
-def partition_of(hashes: np.ndarray, n_partitions: int) -> np.ndarray:
-    """partition_id = url_hash mod P over the unsigned hash space."""
-    h = np.asarray(hashes, dtype=np.int64).view(np.uint64)
-    return (h % np.uint64(n_partitions)).astype(np.int32)

@@ -195,8 +195,3 @@ def extract_document(html: str, url: str, src: str | None = None) -> Extracted:
         links=_harvest_links(root),
         doc=doc,
     )
-
-
-def extract_text(html: str, url: str) -> str:
-    """Convenience: just the pinned parity text for a page."""
-    return extract_document(html, url).text

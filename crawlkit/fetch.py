@@ -325,18 +325,3 @@ def _join_pages(selected: DataFrame, pages: DataFrame,
     # stage.  spread() rebalances only when under-parallel — at cluster
     # scale the scan has plenty of splits and this is a no-op.
     return spread(found.unionByName(missing))
-
-
-def fetch_extract(selected: DataFrame, pages: DataFrame) -> DataFrame:
-    """Join selected frontier rows to pages ("fetch") and extract,
-    returning the full wide extraction frame.
-
-    ``selected`` must carry url/url_canon/url_hash/host/depth.  Missing
-    pages (dead links) surface as status='fetch_failed' (S5 → retry).
-    The round pipeline uses :func:`fetch_extract_write` instead (wide
-    results written in-task); this variant remains the simple surface
-    for tests and ad-hoc use.
-    """
-    return _join_pages(selected, pages).mapInPandas(
-        _extract_partition, EXTRACTED_SCHEMA
-    )

@@ -17,12 +17,11 @@ pinned *text* output of this kernel.  Parsing runs through
 ``HTMLParser(convert_charrefs=True)`` token semantics exactly (round 4:
 the stdlib parser's per-token dispatch was ~30%% of kernel time) — with
 the stdlib-driven :func:`_parse_stdlib` kept as the differential-tested
-semantics oracle and ``CRAWLKIT_PARSER=stdlib`` escape hatch.
+semantics oracle.
 """
 
 from __future__ import annotations
 
-import os
 import re
 from html import escape, unescape
 from html.parser import HTMLParser
@@ -139,9 +138,8 @@ class _TreeBuilder(HTMLParser):
 
 def _parse_stdlib(html: str) -> HRoot:
     """Reference parse path: the stdlib :class:`HTMLParser` driving
-    :class:`_TreeBuilder`.  Kept as the semantics oracle for the fast
-    tokenizer (differential-tested) and as the ``CRAWLKIT_PARSER=stdlib``
-    escape hatch."""
+    :class:`_TreeBuilder`.  Kept as the semantics oracle the fast
+    tokenizer is differential-tested against."""
     builder = _TreeBuilder()
     builder.feed(html)
     builder.close()
@@ -475,17 +473,11 @@ def _parse_fast(rawdata: str) -> HRoot:
     return root
 
 
-_USE_STDLIB = os.environ.get("CRAWLKIT_PARSER", "").lower() == "stdlib"
-
-
 def parse_html(html: str) -> HElement:
     """Parse HTML into a tree rooted at a synthetic ``#root`` element.
 
     Uses the fast single-pass tokenizer (differential-tested against the
-    stdlib parser); set ``CRAWLKIT_PARSER=stdlib`` to force the stdlib
-    path."""
-    if _USE_STDLIB:
-        return _parse_stdlib(html)
+    stdlib parser)."""
     return _parse_fast(html)
 
 

@@ -44,12 +44,6 @@ def lang639_3(lang: str) -> str:
     return form_map().get(lang.lower(), "")
 
 
-def languages_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
-        LANGUAGES, "iso639_1 string, iso639_3 string, english string, native string"
-    )
-
-
 def forms_df(spark: SparkSession) -> DataFrame:
     """The broadcastable (form, iso639_3) dim — 615 rows, a few KB."""
     return spark.createDataFrame(

@@ -3,9 +3,9 @@
 One round = one DataFrame job DAG:
 
 ``frontier(queued, round=r) → [T3 expiry: stale urls leave the seen
-set (tombstones + in-place cuckoo delete) and requeue] → P2 validity
+set (tombstones) and requeue] → P2 validity
 (done at enqueue) → P3 freshness vs latest results → J2 urlseen
-bloom/cuckoo anti-join (exact-confirmed) → W2/T4 salted per-host
+bloom anti-join (exact-confirmed) → W2/T4 salted per-host
 politeness top-k → J8 fetch join against pages → X1-X10 mapInPandas
 extraction → fan-out: results ∥ urlseen delta ∥ frontier delta (links
 + deferred + retries + expired requeues) ∥ tombstones ∥ metrics``
@@ -40,11 +40,9 @@ from .synth import EPOCH
 from .urlseen import (
     derive_n_partitions,
     effective_exact,
-    evicted_seen_partitions,
     latest_blooms,
     probe_unseen,
     updated_bloom_partitions,
-    with_partition_id,
 )
 
 
@@ -54,9 +52,9 @@ class CrawlConfig:
     # power of two; also the parallelism of bloom probe/rebuild stages.
     # Sized so one partition's serialized filter stays within
     # urlseen.PARTITION_BYTE_BUDGET — set ``expected_urls`` to derive
-    # it instead of guessing (10^10 urls → 512 bloom / 2048 cuckoo
-    # partitions at the default 64 MiB budget).  Pinned in the
-    # warehouse manifest at bootstrap; resumes adopt the pinned value.
+    # it instead of guessing (10^10 urls → 512 partitions at the
+    # default 64 MiB budget).  Pinned in the warehouse manifest at
+    # bootstrap; resumes adopt the pinned value.
     n_bloom_partitions: int = 64
     max_depth: int = 4
     round_duration_ms: int = 60_000
@@ -68,20 +66,14 @@ class CrawlConfig:
     # with the scan — the html side crosses zero exchanges even above
     # the broadcast cutoff.  0 keeps the caller's pages frame as-is.
     pages_buckets: int = 0
-    # URL-seen filter structure: "bloom" (default) or "cuckoo" — cuckoo
-    # supports in-place stale-URL eviction (urlseen.evicted_seen_partitions)
-    # at ~the same memory.  The probe path is identical for both; the
-    # final URL-seen set is exact either way (exact-confirm join).
-    seen_filter: str = "bloom"
     # Recrawl expiry (T3 engine mechanism): a url whose newest stored
     # doc is older than this many days is EVICTED from the URL-seen set
     # (tombstone rows, O(evicted) — see urlseen.effective_exact) and
     # requeued for the next round, closing the fetch→stale→refetch
-    # cycle the freshness predicate (fresh_days) only filters on.  With
-    # seen_filter="cuckoo" the filter fingerprints are also deleted
-    # in place; bloom partitions keep their bits (exact-confirm absorbs
-    # the false positives).  None (default) disables expiry — zero
-    # added work per round.  Only content-bearing (status=ok) urls
+    # cycle the freshness predicate (fresh_days) only filters on.  The
+    # bloom partitions keep the evicted urls' bits (exact-confirm
+    # absorbs the false positives).  None (default) disables expiry —
+    # zero added work per round.  Only content-bearing (status=ok) urls
     # expire; terminal failures (not_found/too_large) stay seen.
     expire_days: int | None = None
     # Expected total URL count for this crawl (the frontier design
@@ -94,9 +86,7 @@ class CrawlConfig:
 
     def __post_init__(self) -> None:
         if self.expected_urls is not None:
-            self.n_bloom_partitions = derive_n_partitions(
-                self.expected_urls, kind=self.seen_filter
-            )
+            self.n_bloom_partitions = derive_n_partitions(self.expected_urls)
 
 
 FRONTIER_COLS = [f.name for f in schema.FRONTIER_SCHEMA.fields]
@@ -279,11 +269,9 @@ def run_round(
     # live in deltas committed at rounds >= round_no-1.  In steady
     # state that is exactly ONE delta; a long crawl therefore pays
     # O(1) file listings/footers per round, not O(crawl history).
-    # Legacy pre-ts warehouses predate this write invariant, so they
-    # conservatively read everything.
-    frontier_rounds = wh.committed_rounds("frontier")
-    if not wh.has_pre_ts_rounds():
-        frontier_rounds = [r for r in frontier_rounds if r >= round_no - 1]
+    frontier_rounds = [
+        r for r in wh.committed_rounds("frontier") if r >= round_no - 1
+    ]
     frontier = wh.read(spark, "frontier", schema.FRONTIER_SCHEMA,
                        rounds=frontier_rounds)
     # Frontier deltas are deduped per (round, url_hash) AT WRITE TIME
@@ -293,15 +281,6 @@ def run_round(
     queued = frontier.where(
         (F.col("round") == round_no) & (F.col("status") == "queued")
     )
-    if wh.has_pre_ts_rounds():
-        # Legacy warehouse: rounds committed by engines that predate
-        # write-time dedupe (detected by their missing manifest ts)
-        # may carry duplicate (round, url_hash) delta rows — e.g. a
-        # fetch_failed retry that was also rediscovered as an
-        # out-link.  Re-apply the merge once here so a resume never
-        # double-fetches; warehouses written entirely by this engine
-        # skip the shuffle.
-        queued = _dedupe_frontier(queued, round_no)
     robots = wh.read(spark, "hostbudget", schema.HOSTBUDGET_SCHEMA)
     bloom_state = latest_blooms(
         wh.read(spark, "urlseen_bloom", schema.URLSEEN_BLOOM_SCHEMA)
@@ -329,12 +308,11 @@ def run_round(
     have_seen = bool(wh.committed_rounds("urlseen_exact"))
 
     # T3 recrawl expiry: urls whose newest stored doc has gone stale
-    # leave the seen set (tombstones + optional in-place cuckoo delete)
-    # and re-enter the frontier.  ``seen_round == res_round`` pins
-    # eligibility to urls whose LAST terminal outcome was that stored
-    # doc — a url refetched after a previous expiry that 404'd has a
-    # newer exact row and is never re-expired, so dead urls cannot
-    # requeue-loop.  Urls already queued this round or later are
+    # leave the seen set (tombstones) and re-enter the frontier.
+    # ``seen_round == res_round`` pins eligibility to urls whose LAST
+    # terminal outcome was that stored doc — a url refetched after a
+    # previous expiry that 404'd has a newer exact row and is never
+    # re-expired, so dead urls cannot requeue-loop.  Urls already queued this round or later are
     # excluded (they are about to be fetched anyway).
     stale = None
     expiry_sig = None  # set when this round ran (and must commit) a fresh scan
@@ -378,7 +356,7 @@ def run_round(
             metrics["expiry_scanned"] = int(expiry_sig is not None)
             stale = _filter_stale(
                 cand, exact, frontier, round_no,
-            ).persist()  # feeds eviction delta, tombstones, requeue
+            ).persist()  # feeds in-flight exact view, tombstones, requeue
             metrics["expired"] = stale.count()
             if metrics["expired"] == 0:
                 stale.unpersist()
@@ -388,39 +366,12 @@ def run_round(
         queued.unpersist()
         return None
 
-    evict_delta = None
     if stale is not None:
         # In-flight view: this round's probes and rebuild sources must
         # not see the urls being evicted (their tombstones commit with
-        # this round).
+        # this round).  The evicted urls' filter bits stay set; the
+        # exact anti-join on this view absorbs them.
         exact = exact.join(stale.select("url_hash"), "url_hash", "left_anti")
-        if cfg.seen_filter == "cuckoo":
-            evict_delta = evicted_seen_partitions(
-                stale.select("url_hash"), bloom_state, exact.limit(0),
-                cfg.n_bloom_partitions, round_no, kind="cuckoo",
-                strict=False,  # mixed payloads after a kind switch: skip
-            ).persist()
-            # Lenient mode silently keeps a bloom partition's bits set
-            # (exact-confirm absorbs the false positives) — surface HOW
-            # MANY partitions did that, so an operator watching filter
-            # occupancy can tell eviction is partially inert after a
-            # kind switch.  skipped = touched partitions that HAVE a
-            # filter row minus partitions that emitted a delta (cuckoo
-            # in-place deletes always emit one).
-            touched_with_filter = (
-                with_partition_id(
-                    stale.select("url_hash"), cfg.n_bloom_partitions
-                )
-                .select("partition_id")
-                .distinct()
-                .join(bloom_state.select("partition_id"),
-                      "partition_id", "left_semi")
-            )
-            metrics["expired_skipped_partitions"] = (
-                touched_with_filter.count() - evict_delta.count()
-            )
-            # downstream probe + insert-absorb run on the evicted state
-            bloom_state = latest_blooms(bloom_state.unionByName(evict_delta))
 
     def probe(df: DataFrame) -> DataFrame:
         if not have_seen:
@@ -486,26 +437,7 @@ def run_round(
     )
     bloom_delta = updated_bloom_partitions(
         new_seen, bloom_state, exact, cfg.n_bloom_partitions, round_no,
-        kind=cfg.seen_filter,
     )
-    if evict_delta is not None:
-        # One filter row per (partition, round): partitions receiving
-        # inserts this round already absorbed the eviction (the insert
-        # delta was computed on the evicted state); evict-only
-        # partitions ship their delta directly.  ``insert_touched`` is
-        # derived from the narrow persisted new_seen frame — by
-        # construction exactly the partitions updated_bloom_partitions
-        # emits rows for — so neither cogroup evaluates twice.
-        insert_touched = (
-            with_partition_id(
-                new_seen.select("url_hash"), cfg.n_bloom_partitions
-            )
-            .select("partition_id")
-            .distinct()
-        )
-        bloom_delta = bloom_delta.unionByName(
-            evict_delta.join(insert_touched, "partition_id", "left_anti")
-        )
 
     # Frontier growth: out-links of ok pages, deduped deterministically,
     # minus (seen ∪ just-fetched ∪ still-queued deferred/retries).
@@ -647,8 +579,6 @@ def run_round(
         df.unpersist()
     if stale is not None:
         stale.unpersist()
-    if evict_delta is not None:
-        evict_delta.unpersist()
     return metrics
 
 

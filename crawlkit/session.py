@@ -13,6 +13,26 @@ import os
 
 from pyspark.sql import SparkSession
 
+MAX_DRIVER_MB = 48 * 1024
+
+
+def _default_driver_mem() -> str:
+    """Half the machine's RAM (``MemTotal``), capped at 48g.
+
+    In local mode the driver heap IS the executor heap; a heap sized
+    past the machine's RAM lets the JVM die mid-job committing pages
+    the OS cannot give it.  Falls back to the cap where
+    ``/proc/meminfo`` is unreadable (non-Linux)."""
+    try:
+        with open("/proc/meminfo") as fh:
+            for line in fh:
+                if line.startswith("MemTotal:"):
+                    half_mb = int(line.split()[1]) // 2048
+                    return f"{max(min(half_mb, MAX_DRIVER_MB), 1024)}m"
+    except OSError:
+        pass
+    return f"{MAX_DRIVER_MB}m"
+
 
 def get_spark(
     app_name: str = "crawlkit",
@@ -48,7 +68,10 @@ def get_spark(
         )
         # local mode: the driver heap IS the executor heap — size it for
         # wide cached frames (html/cbor columns) at full task concurrency
-        .config("spark.driver.memory", os.environ.get("CRAWLKIT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("CRAWLKIT_DRIVER_MEM") or _default_driver_mem(),
+        )
         .config("spark.sql.session.timeZone", "UTC")
         # fetch_extract_write's per-task shard files require it off (it
         # also asserts); off is Spark's default — pinned here so a

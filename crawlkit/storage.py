@@ -217,17 +217,6 @@ class Warehouse:
     def last_committed_round(self) -> int | None:
         return self._read_manifest()["last_round"]
 
-    def has_pre_ts_rounds(self) -> bool:
-        """True when any committed round lacks a logical timestamp —
-        i.e. the warehouse was (partly) written by an engine version
-        that predates write-time frontier dedupe, so frontier deltas
-        from those rounds may hold duplicate (round, url_hash) rows
-        and a resume must re-apply the merge on read."""
-        return any(
-            "ts" not in info
-            for info in self._read_manifest()["rounds"].values()
-        )
-
     def latest_extra(self, key: str) -> tuple[int, object] | None:
         """(round_no, value) from the NEWEST committed round whose
         manifest entry carries ``key`` (written via ``commit_round``'s

@@ -76,11 +76,6 @@ def avg_token_len(c: Column | str) -> Column:
     return F.when(F.size(toks) > 0, total / F.size(toks)).otherwise(F.lit(0.0))
 
 
-def punct_count(c: Column | str, klass: str = "[.,!?;:]") -> Column:
-    col = F.col(c) if isinstance(c, str) else c
-    return F.length(col) - F.length(F.regexp_replace(col, klass, ""))
-
-
 def quality_score(c: Column | str) -> Column:
     """Composite [0,1] quality heuristic: enough tokens, sane token
     length, some stopwords — the usual web-text quality gates."""

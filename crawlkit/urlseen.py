@@ -1,4 +1,4 @@
-"""URL-seen set: partitioned bloom/cuckoo pre-filter + exact confirm (J2).
+"""URL-seen set: partitioned bloom pre-filter + exact confirm (J2).
 
 Replaces the reference's LWT row lock + freshness probe
 (``/root/reference/src/db/model.ts:115-128,161-191``) with batch
@@ -6,12 +6,7 @@ semantics (SURVEY.md §4.2):
 
 * ``urlseen_bloom``: P filter partitions (P **must be a power of two**
   so the JVM-side ``pmod(xxhash64, P)`` equals the numpy unsigned mod),
-  each a byte-serialized numpy structure — a bloom bit array
-  (`bloom.BloomPartition`) or a cuckoo slot table
-  (`cuckoo.CuckooPartition`); the payload self-describes its kind, so
-  the probe path is identical for both and a deployment can switch
-  kinds mid-crawl (absorbing partitions keep their kind; rebuilds adopt
-  the configured one).
+  each a byte-serialized `bloom.BloomPartition` bit array.
 * ``urlseen_exact``: the exact hash set, used to confirm filter hits so
   the final URL-seen set is *exactly* the reference's — false
   positives cost an extra join probe, never a lost URL.
@@ -20,26 +15,21 @@ Scale shape: candidates are co-grouped with their filter partition
 (``cogroup.applyInPandas`` — only the touched partitions move), the
 filter knocks out the ~99% already-seen mass, and only surviving hits
 pay the exact anti-join.  Partitions rebuild from the exact set only
-when over-full (amortized O(1) per insert).  Cuckoo partitions
-additionally support in-place eviction (`evicted_seen_partitions`) —
-O(evicted) stale-URL expiry vs the bloom's O(partition) rebuild.
+when over-full (amortized O(1) per insert).  Recrawl expiry never
+touches the filter: an evicted url's bits stay set, so it lands among
+the filter hits and the exact anti-join (over the tombstone-filtered
+set, `effective_exact`) reports it unseen.
 """
 
 from __future__ import annotations
 
+import math
 import os
-from typing import Iterable
 
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
-from .bloom import BloomPartition, optimal_bits, optimal_hashes
-from .cuckoo import (
-    DESIGN_LOAD,
-    SLOTS_PER_BUCKET,
-    CuckooPartition,
-    buckets_for,
-)
+from .bloom import BloomPartition, optimal_bits
 from .schema import URLSEEN_BLOOM_SCHEMA
 
 MIN_CAPACITY = 4096
@@ -62,19 +52,15 @@ PARTITION_BYTE_BUDGET = int(
 REBUILD_HEADROOM = 2
 
 
-def filter_payload_bytes(kind: str, n_items: int) -> int:
-    """Serialized payload size of one partition's filter holding
-    ``n_items`` (bloom: 12B header + optimal bit array; cuckoo: 16B
-    header + pow2-rounded uint16 slot table at the design load)."""
-    if kind == "cuckoo":
-        return 16 + buckets_for(n_items) * SLOTS_PER_BUCKET * 2
+def filter_payload_bytes(n_items: int) -> int:
+    """Serialized payload size of one partition's bloom holding
+    ``n_items``: 12B header + the optimal bit array."""
     return 12 + optimal_bits(max(n_items, 1)) // 8
 
 
 def derive_n_partitions(
     expected_urls: int,
     byte_budget: int | None = None,
-    kind: str = "bloom",
 ) -> int:
     """Smallest power-of-two partition count keeping every partition's
     filter payload within ``byte_budget`` at ``expected_urls`` total —
@@ -82,19 +68,17 @@ def derive_n_partitions(
     whole growth schedule, not just at the nominal fill.
 
     Sizing rule (documented in BASELINE.md): bloom ≈ 1.2 B/item at 1%
-    fpp, cuckoo ≈ 2.4-4.8 B/item (uint16 fingerprints at design load,
-    pow2 rounding) — at the 10^10-URL design point with the default
-    64 MiB budget this derives 512 partitions for bloom, 2048 for
-    cuckoo.  The count is pinned in the warehouse manifest at
-    bootstrap; resumes adopt the pinned value (the stored partition
-    layout is authoritative — see ``rounds.run_crawl``)."""
+    fpp — at the 10^10-URL design point with the default 64 MiB budget
+    this derives 512 partitions.  The count is pinned in the warehouse
+    manifest at bootstrap; resumes adopt the pinned value (the stored
+    partition layout is authoritative — see ``rounds.run_crawl``)."""
     if expected_urls <= 0:
         raise ValueError(f"expected_urls must be positive, got {expected_urls}")
     budget = PARTITION_BYTE_BUDGET if byte_budget is None else byte_budget
     p = 1
     while p < (1 << 30):
         per_part = -(-expected_urls // p) * REBUILD_HEADROOM
-        if filter_payload_bytes(kind, per_part) <= budget:
+        if filter_payload_bytes(per_part) <= budget:
             return p
         p *= 2
     raise ValueError(
@@ -103,27 +87,12 @@ def derive_n_partitions(
     )
 
 
-def filter_from_bytes(payload: bytes) -> BloomPartition | CuckooPartition:
-    """Deserialize either filter kind (the payload self-describes)."""
-    if CuckooPartition.is_cuckoo_payload(payload):
-        return CuckooPartition.from_bytes(payload)
-    return BloomPartition.from_bytes(payload)
-
-
-def _new_filter(kind: str, capacity: int) -> BloomPartition | CuckooPartition:
-    if kind == "cuckoo":
-        return CuckooPartition.sized_for(capacity)
-    m = optimal_bits(capacity)
-    return BloomPartition(m, optimal_hashes(m, capacity))
-
-
-def _absorb_budget(f: BloomPartition | CuckooPartition) -> int:
+def _absorb_budget(bp: BloomPartition) -> int:
     """How many items the filter may hold before an in-place absorb
-    must give way to a rebuild."""
-    if isinstance(f, CuckooPartition):
-        # sized_for already bakes in the design load factor
-        return int(f.n_buckets * SLOTS_PER_BUCKET * DESIGN_LOAD)
-    return int(FILL_REBUILD_RATIO * _capacity(f))
+    must give way to a rebuild: a fraction of its design capacity,
+    recovered from geometry (m = -n ln p /(ln2)^2)."""
+    capacity = max(int(bp.m_bits * (math.log(2) ** 2) / -math.log(0.01)), 1)
+    return int(FILL_REBUILD_RATIO * capacity)
 
 
 def _check_pow2(n: int) -> None:
@@ -171,7 +140,7 @@ def probe_unseen(
         if right.empty:
             left["maybe_seen"] = False
             return left
-        bp = filter_from_bytes(bytes(right["bloom_bytes"].iloc[0]))
+        bp = BloomPartition.from_bytes(bytes(right["bloom_bytes"].iloc[0]))
         left["maybe_seen"] = bp.might_contain(left["url_hash"].to_numpy())
         return left
 
@@ -194,7 +163,6 @@ def updated_bloom_partitions(
     exact_seen: DataFrame,
     n_partitions: int,
     round_no: int,
-    kind: str = "bloom",
     byte_budget: int | None = None,
 ) -> DataFrame:
     """New filter rows for the partitions touched by ``new_hashes``.
@@ -203,11 +171,6 @@ def updated_bloom_partitions(
     (capacity permitting) or rebuilds from exact ∪ new at 2× capacity.
     Only touched partitions are rewritten — per-round state delta stays
     proportional to the round's discoveries, not the total seen set.
-
-    ``kind`` ("bloom" | "cuckoo") picks the structure a REBUILD
-    constructs; absorbing partitions keep whatever kind they already
-    are, so switching kinds is safe mid-crawl and converges as
-    partitions fill.
 
     A partition whose serialized payload would exceed ``byte_budget``
     (default :data:`PARTITION_BYTE_BUDGET`) raises instead of shipping
@@ -236,26 +199,16 @@ def updated_bloom_partitions(
         pid = int(left["partition_id"].iloc[0])
         new_vals = left.loc[left["is_new"], "url_hash"].to_numpy()
         bp = (
-            filter_from_bytes(bytes(right["bloom_bytes"].iloc[0]))
+            BloomPartition.from_bytes(bytes(right["bloom_bytes"].iloc[0]))
             if not right.empty
             else None
         )
         total = int(len(left))
-
-        def rebuilt():
-            cap = max(MIN_CAPACITY, 2 * total)
-            nf = _new_filter(kind, cap)
-            nf.add(left["url_hash"].to_numpy())
-            nf.n_items = total
-            return nf
-
         if bp is None or (bp.n_items + len(new_vals)) > _absorb_budget(bp):
-            bp = rebuilt()
+            bp = BloomPartition.sized_for(max(MIN_CAPACITY, 2 * total))
+            bp.add(left["url_hash"].to_numpy())
         else:
-            try:
-                bp.add(new_vals)
-            except OverflowError:  # cuckoo table full before its budget
-                bp = rebuilt()
+            bp.add(new_vals)
         payload = bp.to_bytes()
         if len(payload) > budget:
             raise ValueError(
@@ -281,101 +234,6 @@ def updated_bloom_partitions(
         hashes.groupBy("partition_id")
         .cogroup(bloom_state.groupBy("partition_id"))
         .applyInPandas(rebuild, URLSEEN_BLOOM_SCHEMA)
-    )
-
-
-def _capacity(bp: BloomPartition) -> int:
-    """Approximate design capacity from geometry (m = -n ln p /(ln2)^2)."""
-    import math
-
-    return max(int(bp.m_bits * (math.log(2) ** 2) / -math.log(0.01)), 1)
-
-
-def evicted_seen_partitions(
-    evict_hashes: DataFrame,
-    filter_state: DataFrame,
-    exact_seen: DataFrame,
-    n_partitions: int,
-    round_no: int,
-    kind: str = "bloom",
-    strict: bool = True,
-) -> DataFrame:
-    """New filter rows for the partitions touched by an eviction batch
-    (stale-URL expiry: make evicted urls probe as unseen again so the
-    frontier re-admits them).
-
-    This is where the bloom/cuckoo asymmetry pays: a cuckoo partition
-    deletes the evicted fingerprints IN PLACE — per-partition work and
-    shuffled bytes are O(evicted) — while a bloom partition cannot
-    unset bits and must REBUILD from exact-minus-evicted, O(partition)
-    (``kind="bloom"`` ships the touched partitions' exact rows for
-    that).  Passing ``kind="cuckoo"`` skips shipping the exact rows
-    entirely; a bloom payload encountered in that mode raises, never
-    silently drops items — unless ``strict=False``, which SKIPS bloom
-    partitions instead (no delta row; the stale bits stay set and the
-    exact-confirm join absorbs the false positives — semantically safe,
-    used by the engine's in-round expiry where a mid-crawl kind switch
-    may leave mixed payloads).
-
-    Exact-table maintenance (removing the evicted rows from
-    ``urlseen_exact``) is the caller's transaction; this function only
-    produces the filter delta.  Evictions MUST come from the exact seen
-    set — deleting never-inserted hashes can evict a collider's
-    fingerprint (see `CuckooPartition.delete`).
-    """
-    _check_pow2(n_partitions)
-    ev = with_partition_id(
-        evict_hashes.select("url_hash").withColumn("is_evict", F.lit(True)),
-        n_partitions,
-    )
-    if kind == "cuckoo":
-        hashes = ev
-    else:
-        touched = ev.select("partition_id").distinct()
-        keep = (
-            with_partition_id(exact_seen.select("url_hash"), n_partitions)
-            .join(touched, "partition_id")
-            .join(evict_hashes.select("url_hash"), "url_hash", "left_anti")
-            .withColumn("is_evict", F.lit(False))
-        )
-        hashes = ev.unionByName(keep)
-
-    def apply_evictions(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            columns=["partition_id", "bloom_bytes", "n_items", "round"]
-        )
-        if left.empty or not left["is_evict"].any() or right.empty:
-            return empty  # nothing to evict, or no filter to evict from
-        pid = int(left["partition_id"].iloc[0])
-        f = filter_from_bytes(bytes(right["bloom_bytes"].iloc[0]))
-        ev_vals = left.loc[left["is_evict"], "url_hash"].to_numpy()
-        if isinstance(f, CuckooPartition):
-            f.delete(ev_vals)
-        elif kind == "cuckoo":
-            if not strict:
-                return empty  # bloom payload under lenient cuckoo mode:
-                # leave the bits set; exact-confirm absorbs the FPs
-            raise ValueError(
-                "kind='cuckoo' eviction hit a bloom partition; rerun with "
-                "kind='bloom' so the exact rows ship for a rebuild"
-            )
-        else:
-            keep_vals = left.loc[~left["is_evict"], "url_hash"].to_numpy()
-            f = _new_filter("bloom", max(MIN_CAPACITY, 2 * len(keep_vals)))
-            f.add(keep_vals)
-        return pd.DataFrame(
-            {
-                "partition_id": [pid],
-                "bloom_bytes": [f.to_bytes()],
-                "n_items": [int(f.n_items)],
-                "round": [round_no],
-            }
-        )
-
-    return (
-        hashes.groupBy("partition_id")
-        .cogroup(filter_state.groupBy("partition_id"))
-        .applyInPandas(apply_evictions, URLSEEN_BLOOM_SCHEMA)
     )
 
 

@@ -44,8 +44,8 @@ def tmp_warehouse():
 # the single most expensive fixture in the suite (~25s quiet, minutes
 # under co-tenant weather), and half a dozen tests need one only as a
 # READ-ONLY baseline (parity, plan audits) or as pre-built initial
-# state (expiry resume).  Run each filter kind ONCE per session; tests
-# that mutate state copy the directory first (Warehouse is
+# state (expiry resume).  Run it ONCE per session; tests that mutate
+# state copy the directory first (Warehouse is
 # path-relative, so copytree yields an independent warehouse).
 
 # the standard e2e config every parity test agrees on
@@ -56,31 +56,20 @@ CRAWL_KW = dict(n_bloom_partitions=16, max_depth=3, salt=4)
 TERMINAL_ROUNDS = 8
 
 
-def _session_crawl(spark, pages, synth_cfg, tmp_path_factory, seen_filter):
+@pytest.fixture(scope="session")
+def ref_crawl(spark, pages, synth_cfg, tmp_path_factory):
+    """(cfg, metrics, warehouse_dir) of one fully-terminated default
+    crawl.  Treat the warehouse as read-only — copytree before
+    resuming or mutating."""
     from crawlkit.rounds import CrawlConfig, run_crawl
     from crawlkit.synth import robots_df, seeds_df
 
-    d = str(tmp_path_factory.mktemp(f"wh-session-{seen_filter}"))
-    cfg = CrawlConfig(warehouse=d, seen_filter=seen_filter, **CRAWL_KW)
+    d = str(tmp_path_factory.mktemp("wh-session"))
+    cfg = CrawlConfig(warehouse=d, **CRAWL_KW)
     metrics = run_crawl(spark, cfg, pages, seeds_df(spark, synth_cfg),
                         robots_df(spark, synth_cfg),
                         max_rounds=TERMINAL_ROUNDS)
     return cfg, metrics, d
-
-
-@pytest.fixture(scope="session")
-def ref_crawl(spark, pages, synth_cfg, tmp_path_factory):
-    """(cfg, metrics, warehouse_dir) of one fully-terminated default
-    (bloom) crawl.  Treat the warehouse as read-only — copytree before
-    resuming or mutating."""
-    return _session_crawl(spark, pages, synth_cfg, tmp_path_factory, "bloom")
-
-
-@pytest.fixture(scope="session")
-def cuckoo_crawl(spark, pages, synth_cfg, tmp_path_factory):
-    """Same crawl with the cuckoo seen filter (read-only, see above)."""
-    return _session_crawl(spark, pages, synth_cfg, tmp_path_factory,
-                          "cuckoo")
 
 
 def copy_warehouse(src_dir: str, tmp_path_factory, name: str) -> str:

@@ -385,25 +385,28 @@ def test_bloom_no_false_negatives_and_merge():
     rng = np.random.default_rng(42)
     items = rng.integers(-(2**63), 2**63 - 1, size=5000, dtype=np.int64)
     bp = bloom.BloomPartition.sized_for(5000, fpp=0.01)
-    bp.add(items[:2500])
-    other = bloom.BloomPartition(bp.m_bits, bp.k)
-    other.add(items[2500:])
-    merged = bp.merge(other)
-    assert merged.might_contain(items).all()  # no false negatives
+    bp.add(items)
+    assert bp.might_contain(items).all()  # no false negatives
     fresh = rng.integers(-(2**63), 2**63 - 1, size=20000, dtype=np.int64)
-    fpp = merged.might_contain(fresh).mean()
+    fpp = bp.might_contain(fresh).mean()
     assert fpp < 0.05
     # byte round-trip
-    rt = bloom.BloomPartition.from_bytes(merged.to_bytes())
-    assert rt.k == merged.k and rt.n_items == merged.n_items
+    rt = bloom.BloomPartition.from_bytes(bp.to_bytes())
+    assert rt.k == bp.k and rt.n_items == bp.n_items
     assert rt.might_contain(items).all()
 
 
-def test_bloom_partitioning_stable():
-    h = np.array([-5, -1, 0, 1, 2**62], dtype=np.int64)
-    p = bloom.partition_of(h, 8)
-    assert p.dtype == np.int32 and (p >= 0).all() and (p < 8).all()
-    assert (bloom.partition_of(h, 8) == p).all()
+def test_bloom_from_bytes_rejects_foreign_payloads():
+    """A payload whose header no bloom writes is refused up front — a
+    cuckoo-style 0xFFFFFFFF tag read as k would otherwise size a
+    (k, n) index matrix of ~32 GB on the first probe."""
+    cuckoo_style = (0xFFFFFFFF).to_bytes(4, "little") + bytes(12 + 64)
+    with pytest.raises(ValueError, match="k=4294967295"):
+        bloom.BloomPartition.from_bytes(cuckoo_style)
+    with pytest.raises(ValueError):
+        bloom.BloomPartition.from_bytes((0).to_bytes(4, "little") + bytes(72))
+    with pytest.raises(ValueError):  # valid k, no bit array
+        bloom.BloomPartition.from_bytes((4).to_bytes(4, "little") + bytes(8))
 
 
 # -- golden parity on the reference sample -----------------------------------

@@ -1,13 +1,12 @@
-"""T3 recrawl expiry: stale urls leave the URL-seen set (tombstones +
-in-place cuckoo eviction) and get refetched; dead urls never
-requeue-loop; the cycle terminates once everything is fresh.
+"""T3 recrawl expiry: stale urls leave the URL-seen set (tombstones)
+and get refetched; dead urls never requeue-loop; the cycle terminates
+once everything is fresh.
 """
 
 from __future__ import annotations
 
 from datetime import timedelta
 
-import pytest
 from pyspark.sql import functions as F
 
 from crawlkit import schema
@@ -22,10 +21,9 @@ T0 = EPOCH + timedelta(days=1)  # == CrawlConfig.now default (session crawl ts)
 T1 = EPOCH + timedelta(days=11)
 
 
-def _cfg(wh_dir, seen_filter, **kw):
+def _cfg(wh_dir, **kw):
     # CRAWL_KW so the resume agrees with the session crawl's config
-    return CrawlConfig(warehouse=wh_dir, seen_filter=seen_filter,
-                       **CRAWL_KW, **kw)
+    return CrawlConfig(warehouse=wh_dir, **CRAWL_KW, **kw)
 
 
 def _results(spark, wh_dir):
@@ -33,20 +31,18 @@ def _results(spark, wh_dir):
     return wh.read(spark, "results", schema.RESULTS_SCHEMA)
 
 
-def _run_expiry_cycle(spark, pages, src_wh_dir, tmp_path_factory,
-                      seen_filter):
+def _run_expiry_cycle(spark, pages, src_wh_dir, tmp_path_factory):
     """Resume a copy of the session T0 crawl at T1 with a 3-day expiry.
-    The session fixtures (conftest ref_crawl / cuckoo_crawl) ARE the
-    initial T0 crawl: their cfg is CRAWL_KW at the default now == T0.
+    The session fixture (conftest ref_crawl) IS the initial T0 crawl:
+    its cfg is CRAWL_KW at the default now == T0.
     Returns (initial urls, recrawl metrics, results frame, wh_dir)."""
-    wh_dir = copy_warehouse(src_wh_dir, tmp_path_factory,
-                            f"wh-exp-{seen_filter}")
+    wh_dir = copy_warehouse(src_wh_dir, tmp_path_factory, "wh-exp")
     first = {
         r["url_canon"]
         for r in _results(spark, wh_dir).select("url_canon").collect()
     }
     assert first, "initial crawl fetched nothing"
-    mets = run_crawl(spark, _cfg(wh_dir, seen_filter, now=T1, expire_days=3),
+    mets = run_crawl(spark, _cfg(wh_dir, now=T1, expire_days=3),
                      pages, max_rounds=6)
     return first, mets, _results(spark, wh_dir), wh_dir
 
@@ -54,7 +50,7 @@ def _run_expiry_cycle(spark, pages, src_wh_dir, tmp_path_factory,
 def test_expiry_requeues_and_refetches(spark, pages, ref_crawl,
                                        tmp_path_factory):
     first, mets, results, tmp_warehouse = _run_expiry_cycle(
-        spark, pages, ref_crawl[2], tmp_path_factory, "bloom"
+        spark, pages, ref_crawl[2], tmp_path_factory
     )
     # the resumed crawl expired the stale docs and recrawled them
     assert any(m.get("expired", 0) > 0 for m in mets)
@@ -76,29 +72,9 @@ def test_expiry_requeues_and_refetches(spark, pages, ref_crawl,
     assert live.count() == exact.count() - tomb.count()
     # everything fresh now → a further resume is an immediate no-op
     again = run_crawl(
-        spark, _cfg(tmp_warehouse, "bloom", now=T1, expire_days=3),
+        spark, _cfg(tmp_warehouse, now=T1, expire_days=3),
         pages, max_rounds=6)
     assert again == []
-
-
-def test_expiry_cuckoo_matches_bloom(spark, pages, ref_crawl, cuckoo_crawl,
-                                     tmp_path_factory):
-    """The whole expire→requeue→refetch cycle is filter-agnostic: the
-    final results set is identical under bloom and cuckoo (cuckoo
-    additionally deletes fingerprints in place; exact-confirm makes
-    the seen set exact either way)."""
-    outs = {}
-    for kind, src in (("bloom", ref_crawl[2]), ("cuckoo", cuckoo_crawl[2])):
-        _, mets, results, _wh = _run_expiry_cycle(
-            spark, pages, src, tmp_path_factory, kind
-        )
-        assert any(m.get("expired", 0) > 0 for m in mets)
-        outs[kind] = {
-            (r["url_canon"], r["fetched_ts"], r["round"])
-            for r in results.select("url_canon", "fetched_ts", "round")
-            .collect()
-        }
-    assert outs["bloom"] == outs["cuckoo"]
 
 
 def test_effective_exact_is_round_aware(spark):
@@ -130,33 +106,6 @@ def test_rounds_at_or_before_prunes_by_manifest_ts(tmp_warehouse):
     assert wh.committed_rounds("results") == [1, 2, 3]
 
 
-def test_lenient_cuckoo_eviction_skips_bloom_payloads(spark):
-    """strict=False: a bloom payload under kind='cuckoo' produces no
-    delta (bits stay set; exact-confirm absorbs the FPs) instead of
-    raising — the engine's in-round mode, safe across a mid-crawl
-    seen_filter switch."""
-    from crawlkit.urlseen import (evicted_seen_partitions,
-                                  updated_bloom_partitions)
-
-    df = spark.createDataFrame([(h,) for h in range(100)], "url_hash long")
-    state = updated_bloom_partitions(
-        df, spark.createDataFrame([], schema.URLSEEN_BLOOM_SCHEMA),
-        df.limit(0), 8, round_no=1, kind="bloom",
-    ).persist()
-    assert state.count() > 0
-    delta = evicted_seen_partitions(
-        df.limit(10), state, df.limit(0), 8, round_no=2,
-        kind="cuckoo", strict=False,
-    )
-    assert delta.count() == 0
-    with pytest.raises(Exception):
-        evicted_seen_partitions(
-            df.limit(10), state, df.limit(0), 8, round_no=2,
-            kind="cuckoo", strict=True,
-        ).count()
-    state.unpersist()
-
-
 def test_expiry_scan_runs_only_when_prunable_set_changes(
         spark, pages, ref_crawl, tmp_path_factory, monkeypatch):
     """The old-shard candidate scan (max-by over every old results
@@ -177,7 +126,7 @@ def test_expiry_scan_runs_only_when_prunable_set_changes(
         return orig_read(self, spark_, table, schema_, rounds=rounds)
 
     monkeypatch.setattr(storage.Warehouse, "read", spy_read)
-    mets = run_crawl(spark, _cfg(wh_dir, "bloom", now=T1, expire_days=3),
+    mets = run_crawl(spark, _cfg(wh_dir, now=T1, expire_days=3),
                      pages, max_rounds=6)
     # multi-round crawl (expire+requeue, then refetch), ONE shard scan
     assert len(mets) >= 2
@@ -187,7 +136,7 @@ def test_expiry_scan_runs_only_when_prunable_set_changes(
     # a later resume: the refetched shards have aged past the new
     # cutoff → prunable set changed → fresh scan (exactly one more)
     t2 = T1 + timedelta(days=10)
-    mets2 = run_crawl(spark, _cfg(wh_dir, "bloom", now=t2, expire_days=3),
+    mets2 = run_crawl(spark, _cfg(wh_dir, now=t2, expire_days=3),
                       pages, max_rounds=6)
     assert mets2 and mets2[0].get("expiry_scanned") == 1
     assert len(scan_reads) == 2
@@ -206,27 +155,3 @@ def test_expiry_scan_runs_only_when_prunable_set_changes(
         .collect()
     }
     assert t1_set and t2_set == t1_set
-
-
-def test_mixed_kind_eviction_surfaces_skipped_partitions(
-        spark, pages, ref_crawl, cuckoo_crawl, tmp_path_factory):
-    """Lenient cuckoo eviction over bloom payloads is semantically safe
-    but partially inert — the round metrics must say HOW inert
-    (expired_skipped_partitions), per VERDICT r4.  A pure-cuckoo
-    warehouse evicts everything in place → 0 skipped."""
-    # bloom-built state resumed under seen_filter='cuckoo': every
-    # touched partition holds a bloom payload → all skipped
-    wh_dir = copy_warehouse(ref_crawl[2], tmp_path_factory, "wh-mixkind")
-    mets = run_crawl(spark, _cfg(wh_dir, "cuckoo", now=T1, expire_days=3),
-                     pages, max_rounds=6)
-    skips = [m["expired_skipped_partitions"] for m in mets
-             if "expired_skipped_partitions" in m]
-    assert skips and skips[0] > 0
-    # pure cuckoo: in-place deletes, nothing skipped
-    wh_dir2 = copy_warehouse(cuckoo_crawl[2], tmp_path_factory,
-                             "wh-purekind")
-    mets2 = run_crawl(spark, _cfg(wh_dir2, "cuckoo", now=T1, expire_days=3),
-                      pages, max_rounds=6)
-    skips2 = [m["expired_skipped_partitions"] for m in mets2
-              if "expired_skipped_partitions" in m]
-    assert skips2 and skips2[0] == 0

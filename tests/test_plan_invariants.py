@@ -99,3 +99,21 @@ def test_ann_topk_is_take_ordered(spark):
     fn, _ = REGISTRY["ann_topk_cosine"]
     plan = _plan(fn(spark, SF_DIR))
     assert "TakeOrderedAndProject" in plan, plan
+
+
+def test_default_driver_heap_fits_host():
+    """Without CRAWLKIT_DRIVER_MEM the local-mode heap is derived from
+    the machine's RAM (half of MemTotal, capped at 48g), so the test
+    session cannot ask the JVM for more memory than the host has."""
+    from crawlkit.session import MAX_DRIVER_MB, _default_driver_mem
+
+    heap_mb = int(_default_driver_mem().removesuffix("m"))
+    assert 1024 <= heap_mb <= MAX_DRIVER_MB
+    try:
+        with open("/proc/meminfo") as fh:
+            total_kb = next(int(line.split()[1]) for line in fh
+                            if line.startswith("MemTotal:"))
+    except OSError:
+        pytest.skip("no /proc/meminfo")
+    if total_kb >= 2 * 1024 * 1024:
+        assert heap_mb * 1024 <= total_kb // 2

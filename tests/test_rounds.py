@@ -230,46 +230,6 @@ def test_crawl_round_smoke_multiround_and_shuffle_stable(spark):
     assert len(rounds) >= 2, rounds  # the resume actually crawled on
 
 
-def test_legacy_dup_frontier_deltas_fetch_once(spark, pages, synth_cfg,
-                                               tmp_warehouse):
-    """Warehouses committed by engines that predate write-time frontier
-    dedupe can hold duplicate (round, url_hash) delta rows (retry +
-    rediscovered link).  Their manifest rounds carry no logical ts —
-    the legacy marker — and a resume must re-merge on read so the url
-    is fetched ONCE, not once per duplicate row."""
-    from pyspark.sql import functions as F
-
-    from crawlkit import schema
-    from crawlkit.rounds import CrawlConfig, _as_frontier, run_crawl
-    from crawlkit.sparkfns import with_url_identity
-    from crawlkit.storage import Warehouse
-    from crawlkit.synth import robots_df
-
-    url = pages.select("url").orderBy("url").limit(1).collect()[0][0]
-    seeds = spark.createDataFrame(
-        [(url, 0)], "url string, depth int"
-    ).withColumn("discovered_ts", F.current_timestamp())
-    ident = (
-        with_url_identity(seeds)
-        .withColumn("priority", F.lit(0.0))
-        .withColumn("retry_count", F.lit(0))
-    )
-    dup = _as_frontier(ident, 1).unionAll(_as_frontier(ident, 1))
-    wh = Warehouse(tmp_warehouse)
-    wh.write(dup, "frontier", 0)
-    robots = robots_df(spark, synth_cfg)
-    wh.write(robots, "hostbudget", 0)
-    # legacy commit: NO ts
-    wh.commit_round(0, {"frontier": 2,
-                        "hostbudget": wh.row_count("hostbudget", 0)})
-    assert wh.has_pre_ts_rounds()
-
-    cfg = CrawlConfig(warehouse=tmp_warehouse)
-    run_crawl(spark, cfg, pages, max_rounds=1)
-    res = wh.read(spark, "results", schema.RESULTS_SCHEMA)
-    assert res.where(F.col("url") == url).count() == 1
-
-
 def test_frontier_read_is_pruned_to_one_delta(spark, pages, synth_cfg,
                                               tmp_warehouse, monkeypatch):
     """VERDICT r4 item 2: the per-round frontier read must be O(1) in

@@ -25,25 +25,22 @@ from crawlkit.urlseen import (
 
 
 def test_derive_n_partitions_respects_budget():
-    for kind in ("bloom", "cuckoo"):
-        for n in (10**4, 10**6, 10**8, 10**10):
-            p = derive_n_partitions(n, kind=kind)
-            assert p & (p - 1) == 0  # power of two
-            per_part = -(-n // p) * REBUILD_HEADROOM
-            assert filter_payload_bytes(kind, per_part) <= PARTITION_BYTE_BUDGET
-            # minimality: half the partitions would blow the budget
-            if p > 1:
-                per_part2 = -(-n // (p // 2)) * REBUILD_HEADROOM
-                assert (filter_payload_bytes(kind, per_part2)
-                        > PARTITION_BYTE_BUDGET)
+    for n in (10**4, 10**6, 10**8, 10**10):
+        p = derive_n_partitions(n)
+        assert p & (p - 1) == 0  # power of two
+        per_part = -(-n // p) * REBUILD_HEADROOM
+        assert filter_payload_bytes(per_part) <= PARTITION_BYTE_BUDGET
+        # minimality: half the partitions would blow the budget
+        if p > 1:
+            per_part2 = -(-n // (p // 2)) * REBUILD_HEADROOM
+            assert filter_payload_bytes(per_part2) > PARTITION_BYTE_BUDGET
 
 
 def test_derive_n_partitions_design_point():
     # the documented sizing rule (BASELINE.md): 10^10 urls at the
     # 64 MiB default budget
-    assert derive_n_partitions(10**10, kind="bloom") == 512
-    assert derive_n_partitions(10**10, kind="cuckoo") == 2048
-    assert derive_n_partitions(10**6, kind="bloom") == 1
+    assert derive_n_partitions(10**10) == 512
+    assert derive_n_partitions(10**6) == 1
     with pytest.raises(ValueError):
         derive_n_partitions(0)
 
@@ -53,9 +50,6 @@ def test_config_derives_partitions_from_expected_urls(tmp_warehouse):
 
     cfg = CrawlConfig(warehouse=tmp_warehouse, expected_urls=10**10)
     assert cfg.n_bloom_partitions == 512
-    cfg = CrawlConfig(warehouse=tmp_warehouse, expected_urls=10**10,
-                      seen_filter="cuckoo")
-    assert cfg.n_bloom_partitions == 2048
     # no hint → the default stands
     assert CrawlConfig(warehouse=tmp_warehouse).n_bloom_partitions == 64
 
@@ -73,13 +67,13 @@ def test_rebuild_past_budget_fails_loudly(spark):
     with pytest.raises(Exception, match="derive_n_partitions"):
         updated_bloom_partitions(
             hashes, empty_state, hashes.limit(0), 1, round_no=1,
-            kind="bloom", byte_budget=16 * 1024,
+            byte_budget=16 * 1024,
         ).count()
     # 16 partitions keep every payload under the same budget — and the
     # resulting state actually filters (no false negatives)
     state = updated_bloom_partitions(
         hashes, empty_state, hashes.limit(0), 16, round_no=1,
-        kind="bloom", byte_budget=16 * 1024,
+        byte_budget=16 * 1024,
     ).persist()
     assert state.count() == 16
     unseen = probe_unseen(hashes, state, hashes, 16)
