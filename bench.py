@@ -19,16 +19,10 @@ Env:
                        per-round crawl number is apples-to-apples)
   BENCH_CRAWL_REPS     crawl reps (default 3; best rep reported, every
                        rep carries its own /proc/stat steal%% window)
-  BENCH_CRAWL_REGIME   fetch-join regime for the crawl leg: "bucketed"
-                       (default — the 10^10-URL design point's plan:
-                       pages bucket-clustered on url, forced off the
-                       broadcast cutoff) or "broadcast"
-  BENCH_CRAWL_BUCKETS  bucket count for the bucketed regime (default
+  BENCH_CRAWL_BUCKETS  pages bucket count for the fetch join (default
                        128, the BASELINE.md A/B winner; buckets >>
                        cores so bucket-file size, not core count,
                        drives granularity)
-  BENCH_BROADCAST_PROBE  "0" skips the one extra broadcast-regime rep
-                       that rides along for a same-weather comparison
   BENCH_SKIP_CRAWL     set to skip the crawl benchmark
 """
 
@@ -163,32 +157,24 @@ def main() -> None:
         robots = robots_df(spark, scfg).withColumn(
             "crawl_delay_ms", F.lit(0).cast("long"))
 
-        # The measured regime is the SHIPPED scale plan (VERDICT r4
-        # item 3): pages bucket-clustered on url (the Iceberg
-        # bucket-transform stand-in) and the fetch join forced off the
-        # broadcast cutoff — the plan a 10^10-URL frontier runs, where
-        # per-round broadcast is impossible.  The one-time bucketize
-        # ingest happens OUTSIDE the timed reps (at the design point
-        # the corpus is bucketed at write time) and is reported
-        # separately.
-        regime = os.environ.get("BENCH_CRAWL_REGIME", "bucketed")
+        # The one-time bucketize ingest happens OUTSIDE the timed reps
+        # (at the design point the corpus is bucketed at write time)
+        # and is reported separately: it fills a skeleton warehouse
+        # that every rep copies, and the rep's crawl adopts its pinned
+        # bucket count.
         buckets = int(os.environ.get("BENCH_CRAWL_BUCKETS", "128"))
-        ingest_s = 0.0
-        pages_in = pages
-        if regime == "bucketed":
-            t_b = time.perf_counter()
-            pages_in = Warehouse(corpus_dir + "-wh").bucketized_pages(
-                pages, buckets)
-            pages_in.count()  # materialize scan metadata
-            ingest_s = round(time.perf_counter() - t_b, 2)
-            os.environ["CRAWLKIT_MAX_BROADCAST_KEYS"] = "1"
+        skeleton = corpus_dir + "-wh"
+        t_b = time.perf_counter()
+        Warehouse(skeleton).bucketized_pages(pages, buckets).count()
+        ingest_s = round(time.perf_counter() - t_b, 2)
 
         def crawl_rep() -> tuple[float, int, float]:
             wh = tempfile.mkdtemp(prefix="crawlkit-bench-wh-")
+            shutil.copytree(skeleton, wh, dirs_exist_ok=True)
             cfg = CrawlConfig(warehouse=wh, round_duration_ms=600_000)
             with _StealWindow() as w:
                 t0 = time.perf_counter()
-                metrics = run_crawl(spark, cfg, pages_in, seeds, robots,
+                metrics = run_crawl(spark, cfg, pages, seeds, robots,
                                     max_rounds=1)
                 dt = round(time.perf_counter() - t0, 3)
             shutil.rmtree(wh, ignore_errors=True)
@@ -208,7 +194,8 @@ def main() -> None:
         timings["crawl_round_saturated"] = crawl_s
         crawl_stats = {
             "rounds": 1,
-            "regime": regime,
+            "buckets": buckets,
+            "bucketize_ingest_seconds": ingest_s,
             "pages_fetched": fetched,
             "pages_per_sec": round(fetched / crawl_s, 2),
             "pages_per_sec_per_core": round(fetched / crawl_s / cpus, 2),
@@ -217,23 +204,8 @@ def main() -> None:
             "rep_steal_pct": [w for _, _, w in rep_runs],
             "best_rep_steal_pct": crawl_steal,
         }
-        if regime == "bucketed":
-            crawl_stats["buckets"] = buckets
-            crawl_stats["bucketize_ingest_seconds"] = ingest_s
-            os.environ.pop("CRAWLKIT_MAX_BROADCAST_KEYS", None)
-            if os.environ.get("BENCH_BROADCAST_PROBE", "1") != "0":
-                # one broadcast-regime rep under the SAME weather so
-                # the artifact itself evidences bucketed >= broadcast
-                pages_in = pages
-                p_s, p_fetched, p_steal = crawl_rep()
-                crawl_stats["broadcast_probe"] = {
-                    "seconds": p_s,
-                    "pages_fetched": p_fetched,
-                    "pages_per_sec": round(p_fetched / p_s, 2),
-                    "steal_pct": p_steal,
-                }
         shutil.rmtree(corpus_dir, ignore_errors=True)
-        shutil.rmtree(corpus_dir + "-wh", ignore_errors=True)
+        shutil.rmtree(skeleton, ignore_errors=True)
 
     total = round(sum(timings.values()), 3)
     out = {

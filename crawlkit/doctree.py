@@ -677,9 +677,9 @@ def html_to_doc(html: str, math_nodes: bool = False) -> dict:
 
 
 def element_to_doc(el, math_nodes: bool = False) -> dict:
-    """X6 over an already-parsed element: equivalent to
-    ``html_to_doc(inner_html(el))`` (serializer/parser roundtrip is
-    identity) without the serialize + re-parse pass."""
+    """X6 over an already-parsed element: equivalent to ``html_to_doc``
+    over the element's serialized children (serializer/parser roundtrip
+    is identity) without the serialize + re-parse pass."""
     return _DocBuilder(math_nodes).build(el)
 
 

@@ -11,7 +11,7 @@ and its normalize/persist stage (``/root/reference/src/api.ts:94-113``):
 * X4 ``script`` strip.
 * X5 content-region climb: start at the title's parent, climb up to two
   more ancestors while the region text is shorter than 2× the title.
-* X6–X8: region HTML → amended node tree → canonical HTML.
+* X6–X8: region → amended node tree → canonical HTML.
 * X9 canonical-CBOR content bytes.
 * plus the pinned plain-text projection (the byte-parity column) and
   out-link harvesting for the frontier (the reference is a single-URL
@@ -39,7 +39,6 @@ from .htmlkit import (
     HElement,
     element_text,
     find_all,
-    inner_html,
     outer_html_utf8_len,
     parse_html,
     remove_all,
@@ -58,7 +57,6 @@ class Extracted:
     status: str  # 'ok' | 'not_found'
     title: str = ""
     meta: dict[str, str] = field(default_factory=dict)
-    content_html: str = ""  # X5 region inner HTML (doc.html)
     # utf-8 byte length of the full serialized page, trimmed —
     # Buffer.byteLength(page.trim()) exactly as save() guards it
     # (setPage trims, model.ts:77-79,142-147).  The engine stores only
@@ -68,17 +66,16 @@ class Extracted:
     content_cbor: bytes = b""  # X9
     text: str = ""  # pinned parity column
     links: list[str] = field(default_factory=list)
-    # amended doc tree, kept for lazy X8 rendering (below); the crawl
-    # pipeline stores content_cbor + text + content_html only, so
-    # rendering canonical HTML per scraped page was pure hot-path
-    # waste — the reference renders HTML on the READ path
-    # (src/ssr.ts serves stored docs), not at scrape time
+    # amended doc tree (X7); the X8 canonical html is rendered from it
+    # on access.  The fetch stage renders it for every stored ok row
+    # (the results ``html`` column, setHTML(toHTML(obj)) in
+    # api.ts:96-102); not_found and too_large rows never pay for it
     doc: dict | None = field(default=None, repr=False)
 
     @property
     def canonical_html(self) -> str:
         """X8 re-render of the amended tree (reference
-        ``src/tiptap.ts`` generateHTML read path), computed on demand."""
+        ``src/tiptap.ts`` generateHTML)."""
         return doc_to_html(self.doc) if self.doc is not None else ""
 
 
@@ -159,12 +156,12 @@ def extract_document(html: str, url: str, src: str | None = None) -> Extracted:
 
     # X5 content region climb
     region = _climb_content_region(title_els, title)
-    content_html = inner_html(region[0]) if region else ""
 
     # X6+X7: region → amended node tree (deterministic ids from url).
     # Built directly from the already-parsed region element — our
-    # serializer/parser roundtrip is identity, so this equals
-    # html_to_doc(content_html) (golden-pinned) without re-parsing.
+    # serializer/parser roundtrip is identity, so this equals parsing
+    # the region's inner html (the reference's doc.html) without
+    # serializing and re-parsing it.
     doc = (
         element_to_doc(region[0]) if region else {"type": "doc", "content": []}
     )
@@ -188,7 +185,6 @@ def extract_document(html: str, url: str, src: str | None = None) -> Extracted:
         status="ok",
         title=title,
         meta=meta,
-        content_html=content_html,
         page_len=page_len,
         content_cbor=content_cbor,
         text=text,

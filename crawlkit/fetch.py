@@ -6,7 +6,7 @@ canonical url (SURVEY.md J8) — the reference's network fetch
 (``/root/reference/src/crawler.ts:17-110``) replaced by a table scan, so
 byte-identical extraction is what's verified.  Extraction runs in ONE
 ``mapInPandas`` pass over Arrow batches: per batch, the pure-Python
-kernel (``extract.py``) computes title/meta/region-html/CBOR/text/links.
+kernel (``extract.py``) computes title/meta/CBOR/text/canonical-html/links.
 
 Shuffle hygiene: only the frontier's narrow key columns are joined into
 the wide pages scan; the MB-scale raw ``html`` bytes never pass through
@@ -150,13 +150,12 @@ def fetch_extract_write(
     sink,
     round_no: int,
     fetched_ts,
-    n_selected: int | None = None,
 ) -> DataFrame:
     """Fetch-join + extraction that writes the WIDE results shard
     directly from each task via the warehouse's :class:`ShardSink`
     and emits only NARROW rows.
 
-    Why: the wide columns (region html, CBOR content, text — ~60-80 KB
+    Why: the wide columns (canonical html, CBOR content, text — ~60-80 KB
     per page) otherwise cross the Arrow pipe back into the JVM, get
     cached columnar, and get re-read for the parquet write — three
     full passes of multi-GB data per round.  Writing zstd parquet
@@ -242,56 +241,29 @@ def fetch_extract_write(
                 else:
                     writer.abort()
 
-    return _join_pages(selected, pages, n_selected).mapInPandas(
+    return _join_pages(selected, pages).mapInPandas(
         run, NARROW_EXTRACTED_SCHEMA
     )
 
 
-MAX_BROADCAST_KEYS = 1_000_000
-
-
-def _max_broadcast_keys() -> int:
-    """Broadcast-regime cutoff; env-overridable (CRAWLKIT_MAX_BROADCAST_KEYS)
-    so tests and A/B audits can force the large-keys plan on a small
-    corpus without touching code."""
-    import os
-
-    return int(os.environ.get("CRAWLKIT_MAX_BROADCAST_KEYS",
-                              MAX_BROADCAST_KEYS))
-
-
-def _join_pages(selected: DataFrame, pages: DataFrame,
-                n_selected: int | None = None) -> DataFrame:
-    """The J8 fetch join: selected frontier keys against the pages
-    table.
+def _join_pages(selected: DataFrame, pages: DataFrame) -> DataFrame:
+    """The J8 fetch join: selected frontier keys LEFT OUTER the pages
+    table, so a selected url with no page (dead link) comes back with
+    null ``html_bytes`` and extracts as fetch_failed.
 
     Shuffle hygiene — the MB-scale ``html`` column must NOT cross an
-    exchange.  Two regimes:
-
-    * SMALL (``n_selected`` ≤ ``MAX_BROADCAST_KEYS``, explicit count
-      required — an unknown size never opts into an unbounded
-      broadcast):
-      - ``found``: pages INNER JOIN broadcast(narrow keys) — the html
-        bytes stay in their scan partitions, zero exchange;
-      - ``missing`` (dead links → fetch_failed): narrow keys LEFT ANTI
-        pages.url — a narrow-vs-narrow shuffle of key columns only
-        (the scan is column-pruned to ``url``).
-    * LARGE / UNKNOWN: ``narrow LEFT OUTER pages`` with a
-      ``shuffle_hash`` hint on the narrow side — the narrow frame is
-      the BUILD side (SPARK-36612 left-outer build-left), so the html
-      rows stream through the join with no sort and no hash table.
-      When ``pages`` is the bucket-clustered table from
-      :meth:`crawlkit.storage.Warehouse.bucketized_pages`, the scan
-      reports its bucketing and only the narrow side shuffles (into
-      the bucket partitioning): the html-bearing scan feeds the join
-      with ZERO exchange at ANY selected-set size — the Iceberg
-      bucket-transform plan, which is the shipped plan for the
-      10^10-URL design point.  Over a raw (unbucketed) parquet scan
-      the same code degrades to a full shuffle of pages; deployments
-      at that scale bucketize at ingest.
+    exchange.  ``pages`` is the bucket-clustered table from
+    :meth:`crawlkit.storage.Warehouse.bucketized_pages` (``run_crawl``
+    always bucketizes): the scan reports its bucketing, so only the
+    narrow key side shuffles, into the bucket partitioning, and the
+    html-bearing scan feeds the join with ZERO exchange at any
+    selected-set size — the Iceberg bucket-transform plan of the
+    10^10-URL design point.  The ``shuffle_hash`` hint makes the narrow
+    frame the BUILD side (SPARK-36612 left-outer build-left), so the
+    html rows stream through the join with no sort and no hash table.
+    The join output is already bucket-count parallel; a post-join
+    repartition would be exactly the html shuffle this plan avoids.
     """
-    from .dedupe import spread
-
     narrow = selected.select(
         F.col("url").alias("src"), "url_canon", "url_hash", "host", "depth"
     )
@@ -300,28 +272,6 @@ def _join_pages(selected: DataFrame, pages: DataFrame,
         F.col("html").alias("html_bytes"),
         F.col("lang"),
     )
-    if n_selected is None or n_selected > _max_broadcast_keys():
-        # No spread(): the join output is already wide-parallel (the
-        # bucket count or shuffle.partitions), and a post-join
-        # repartition would be exactly the html shuffle this plan
-        # exists to avoid.
-        return narrow.hint("shuffle_hash").join(
-            pages_sel, narrow.url_canon == F.col("page_url"), "left"
-        ).drop("page_url")
-    found = pages_sel.join(
-        F.broadcast(narrow), F.col("url_canon") == F.col("page_url"), "inner"
+    return narrow.hint("shuffle_hash").join(
+        pages_sel, narrow.url_canon == F.col("page_url"), "left"
     ).drop("page_url")
-    missing = (
-        narrow.join(
-            pages_sel.select("page_url"),
-            narrow.url_canon == F.col("page_url"),
-            "left_anti",
-        )
-        .withColumn("html_bytes", F.lit(None).cast("binary"))
-        .withColumn("lang", F.lit(None).cast("string"))
-    )
-    # The found side inherits the pages scan's split count; a small
-    # corpus (few parquet splits) would starve the CPU-bound extraction
-    # stage.  spread() rebalances only when under-parallel — at cluster
-    # scale the scan has plenty of splits and this is a no-op.
-    return spread(found.unionByName(missing))

@@ -599,14 +599,6 @@ def _serialize_into(node: HNode, out: list[str]) -> None:
     out.append(f"</{el.tag}>")
 
 
-def inner_html(el: HElement) -> str:
-    """cheerio ``.html()``: serialisation of the element's children."""
-    out: list[str] = []
-    for child in el.children:
-        _serialize_into(child, out)
-    return "".join(out)
-
-
 def utf8_len(s: str) -> int:
     """UTF-8 byte length without materializing the bytes for the
     overwhelmingly-common ASCII case."""

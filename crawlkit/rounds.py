@@ -61,10 +61,11 @@ class CrawlConfig:
     salt: int = 8
     max_retries: int = 2
     fresh_days: int = 3  # reference freshness window (src/db/model.ts:45-50)
-    # >0: bucket-cluster the pages corpus on url at crawl start
-    # (Warehouse.bucketized_pages) so the J8 fetch join co-partitions
-    # with the scan — the html side crosses zero exchanges even above
-    # the broadcast cutoff.  0 keeps the caller's pages frame as-is.
+    # Bucket count of the pages corpus, bucket-clustered on url at crawl
+    # start (Warehouse.bucketized_pages) so the J8 fetch join
+    # co-partitions with the scan and the html side crosses zero
+    # exchanges.  0: adopt the count pinned in the warehouse, else
+    # spark.sql.shuffle.partitions.
     pages_buckets: int = 0
     # Recrawl expiry (T3 engine mechanism): a url whose newest stored
     # doc is older than this many days is EVICTED from the URL-seen set
@@ -422,7 +423,7 @@ def run_round(
     # downstream joins.
     extracted = fetch_extract_write(
         selected, pages, wh.staging_sink("results", round_no),
-        round_no, cfg.now, n_selected=metrics["selected"],
+        round_no, cfg.now,
     ).persist()
 
     ok = extracted.where(F.col("status") == "ok")
@@ -609,16 +610,14 @@ def run_crawl(
             cfg.n_bloom_partitions = int(pinned[1])
     if not cfg.pages_buckets:
         # The on-disk bucket layout is authoritative, like the
-        # seen-filter partition count: a resume that omits
-        # pages_buckets adopts the pinned spec instead of silently
-        # degrading every fetch join to the shuffled plan.
-        pinned_b = wh.pages_bucket_count()
-        if pinned_b:
-            cfg.pages_buckets = pinned_b
-    if cfg.pages_buckets:
-        # One-time (idempotent, resume-safe) bucket-clustered ingest;
-        # every round's fetch join then co-partitions with the scan.
-        pages = wh.bucketized_pages(pages, cfg.pages_buckets)
+        # seen-filter partition count: a resume adopts the pinned
+        # spec.  A fresh crawl takes the shuffle partition count, the
+        # width the narrow side's exchange would have had anyway.
+        cfg.pages_buckets = wh.pages_bucket_count() or int(
+            spark.conf.get("spark.sql.shuffle.partitions"))
+    # One-time (idempotent, resume-safe) bucket-clustered ingest; every
+    # round's fetch join then co-partitions with the scan.
+    pages = wh.bucketized_pages(pages, cfg.pages_buckets)
     all_metrics: list[dict[str, int]] = []
     for round_no in range(last + 1, last + 1 + max_rounds):
         m = run_round(spark, wh, cfg, pages, round_no)

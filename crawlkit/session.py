@@ -60,8 +60,7 @@ def get_spark(
         .config("spark.sql.parquet.compression.codec", "zstd")
         # Smaller input splits: wide binary rows (html) mean a 128 MB
         # split holds few rows but hours of Python-kernel work; 32 MB
-        # splits keep every core fed without an explicit repartition
-        # (spread() then passes through — no shuffle of page bytes).
+        # splits keep every core fed without an explicit repartition.
         .config(
             "spark.sql.files.maxPartitionBytes",
             os.environ.get("CRAWLKIT_MAX_PARTITION_BYTES", "33554432"),

@@ -296,15 +296,14 @@ class Warehouse:
             total += pq.ParquetFile(f).metadata.num_rows
         return total
 
-    # -- bucketed pages (J8 large-regime fetch join) ----------------------
+    # -- bucketed pages (J8 fetch join) ------------------------------------
     def pages_bucket_count(self) -> int | None:
         """Bucket count pinned by a previous :meth:`bucketized_pages`
         ingest into this warehouse, or None if pages were never
         bucketized here.  Like the seen-filter partition count, the
         on-disk layout is authoritative on resume: a caller that
-        forgets ``pages_buckets`` must not silently degrade every
-        fetch join to the shuffled plan when the co-partitioned ingest
-        already exists."""
+        omits ``pages_buckets`` reuses the existing ingest instead of
+        re-ingesting at another count."""
         spec_path = self.root / "pages_bucketed" / "_bucket_spec.json"
         if not spec_path.exists():
             return None
@@ -314,13 +313,13 @@ class Warehouse:
         """Bucket-cluster the pages corpus on its join key (``url``)
         ONCE, so every round's fetch join co-partitions with the scan
         and the html-bearing side crosses ZERO exchanges at ANY
-        selected-set size (the >1M-keys regime where per-round
-        broadcast is impossible; at the 10^10-URL design point this is
-        the NORMAL regime).  This is the parquet stand-in for Iceberg's
-        ``bucket(url)`` partition transform (SURVEY.md §1.3), expressed
-        through Spark's native bucketed tables: the scan reports
-        ``HashPartitioning(url, buckets)``, so EnsureRequirements
-        shuffles only the narrow frontier side into the bucketing.
+        selected-set size, up to the 10^10-URL design point where a
+        per-round broadcast is impossible.  This is the parquet
+        stand-in for Iceberg's ``bucket(url)`` partition transform
+        (SURVEY.md §1.3), expressed through Spark's native bucketed
+        tables: the scan reports ``HashPartitioning(url, buckets)``,
+        so EnsureRequirements shuffles only the narrow frontier side
+        into the bucketing.
 
         Cost model: the one-time ingest writes each input task's rows
         into per-bucket files (task-local sort by bucket id, NO

@@ -1,14 +1,15 @@
-"""J8 large-regime fetch join (VERDICT r3 item 1).
+"""J8 fetch join over the bucket-clustered pages corpus.
 
-Above the broadcast cutoff the fetch join must NOT shuffle the pages
-scan: with the pages corpus bucket-clustered on ``url``
-(``Warehouse.bucketized_pages`` — the parquet stand-in for Iceberg's
-``bucket(url)`` transform, SURVEY.md §1.3), the html-bearing scan feeds
-the join with zero exchanges and only the narrow frontier side shuffles
-into the bucket partitioning.  Verified three ways: the physical plan
-(one Exchange, on the narrow side, bucketed scan active), fetched-set
-equality vs the default engine with the cutoff forced to 1, and
-resume-time re-registration of the bucketed table.
+The fetch join must NOT shuffle the pages scan: with the pages corpus
+bucket-clustered on ``url`` (``Warehouse.bucketized_pages`` — the
+parquet stand-in for Iceberg's ``bucket(url)`` transform, SURVEY.md
+§1.3), the html-bearing scan feeds the join with zero exchanges and
+only the narrow frontier side shuffles into the bucket partitioning.
+Verified on the physical plan (one Exchange, on the narrow side,
+bucketed scan active, no broadcast), on the default crawl's bucket
+count and its adoption on resume, and on resume-time re-registration
+of the bucketed table.  Crawl equality with the oracle simulator is
+checked in ``test_rounds.py``.
 """
 
 from __future__ import annotations
@@ -16,12 +17,11 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from crawlkit import schema
 from crawlkit.rounds import CrawlConfig, run_crawl
 from crawlkit.storage import Warehouse
 from crawlkit.synth import robots_df, seeds_df
 
-from test_rounds import MAX_DEPTH, MAX_ROUNDS, _fetch_order
+from test_rounds import MAX_DEPTH
 
 BUCKETS = 16
 
@@ -48,68 +48,94 @@ def _selected_frame(spark):
     )
 
 
+def _plan_nodes(node):
+    """Physical plan nodes, pre-order (cached relations are leaves:
+    their plan ran before this one)."""
+    yield node
+    children = node.children()
+    for i in range(children.size()):
+        yield from _plan_nodes(children.apply(i))
+
+
+def _kind(node) -> str:
+    return node.getClass().getSimpleName()
+
+
+def _assert_bucketed_join_plan(df) -> None:
+    """The fetch join's physical plan: exactly ONE Exchange, directly
+    on the narrow frontier side; nothing broadcast; the pages side a
+    bucketed scan (SelectedBucketsCount) with no exchange above it;
+    and the join streams pages as the probe side (ShuffledHashJoin
+    BuildLeft) — no sort, no hash table, no shuffle of html."""
+    root = df._jdf.queryExecution().executedPlan()
+    if _kind(root) == "AdaptiveSparkPlanExec":
+        root = root.executedPlan()
+    kinds = [_kind(n) for n in _plan_nodes(root)]
+    assert "BroadcastExchangeExec" not in kinds, root.toString()
+    assert kinds.count("ShuffleExchangeExec") == 1, root.toString()
+    (join,) = [n for n in _plan_nodes(root)
+               if _kind(n) == "ShuffledHashJoinExec"]
+    assert join.buildSide().toString() == "BuildLeft", root.toString()
+    assert _kind(join.left()) == "ShuffleExchangeExec", root.toString()
+    (scan,) = [n for n in _plan_nodes(join.right())
+               if _kind(n) == "FileSourceScanExec"]
+    assert scan.bucketedScan(), root.toString()
+    assert "SelectedBucketsCount" in scan.toString(), root.toString()
+
+
 def test_large_regime_plan_html_never_crosses_exchange(spark, bucket_wh):
-    """The done-criterion plan audit: forcing the >cutoff regime, the
-    executed plan has exactly ONE Exchange (the narrow frontier side,
-    printed before the pages scan in the tree), the pages scan is a
-    bucketed scan (SelectedBucketsCount), and the join streams pages
-    as the probe side (ShuffledHashJoin BuildLeft) — no sort, no hash
-    table, no shuffle of html."""
+    """The done-criterion plan audit on the 16-bucket fixture."""
     from crawlkit.fetch import _join_pages
 
     _, pages_b = bucket_wh
-    joined = _join_pages(_selected_frame(spark), pages_b,
-                         n_selected=10**9)  # way over any cutoff
-    plan = joined._jdf.queryExecution().executedPlan().toString()
-    assert "SelectedBucketsCount" in plan, plan
-    assert "ShuffledHashJoin" in plan and "BuildLeft" in plan, plan
-    assert plan.count("Exchange") == 1, plan
-    # tree prints the (shuffled) narrow left child before the pages
-    # scan: the single Exchange must sit on the narrow side, never
-    # above the html-bearing FileScan
-    assert plan.index("Exchange") < plan.index("FileScan"), plan
+    joined = _join_pages(_selected_frame(spark), pages_b)
+    _assert_bucketed_join_plan(joined)
     # and the join returns every selected key exactly once (left outer)
     assert joined.count() == 40
 
 
-def test_unknown_size_never_broadcasts(spark, pages):
-    """ADVICE r3: an unknown selected-set size must take the safe
-    shuffled plan, not an unbounded broadcast."""
-    from crawlkit.fetch import _join_pages
-
-    plan = (
-        _join_pages(_selected_frame(spark), pages, n_selected=None)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "BroadcastExchange" not in plan, plan
-
-
-def test_crawl_equivalent_in_forced_large_regime(
-    spark, pages, synth_cfg, ref_crawl, tmp_path_factory, monkeypatch
+def test_default_crawl_buckets_by_shuffle_partitions(
+    spark, pages, synth_cfg, tmp_path_factory, monkeypatch
 ):
-    """Cutoff forced to 1 (every round in the large regime) + bucketed
-    pages: the fetched set, result rows, and text bytes all equal the
-    default engine's (the session reference crawl)."""
-    ref_dir = ref_crawl[2]
+    """A crawl with ``pages_buckets`` unset bucketizes into
+    ``spark.sql.shuffle.partitions`` buckets and pins that count; its
+    executed fetch join is the bucketed plan; a resume adopts the
+    pinned count."""
+    from crawlkit import fetch
 
-    monkeypatch.setenv("CRAWLKIT_MAX_BROADCAST_KEYS", "1")
-    big_dir = str(tmp_path_factory.mktemp("wh-big"))
-    cfg_b = CrawlConfig(warehouse=big_dir, n_bloom_partitions=16,
-                        max_depth=MAX_DEPTH, salt=4,
-                        pages_buckets=BUCKETS)
-    run_crawl(spark, cfg_b, pages, seeds_df(spark, synth_cfg),
-              robots_df(spark, synth_cfg), max_rounds=MAX_ROUNDS)
+    n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    plans: list = []
+    inner = fetch._join_pages
 
-    assert _fetch_order(spark, big_dir) == _fetch_order(spark, ref_dir)
-    ref_res = Warehouse(ref_dir).read(spark, "results",
-                                      schema.RESULTS_SCHEMA)
-    big_res = Warehouse(big_dir).read(spark, "results",
-                                      schema.RESULTS_SCHEMA)
-    ref_rows = {(r["url_canon"], r["text"]) for r in
-                ref_res.select("url_canon", "text").collect()}
-    big_rows = {(r["url_canon"], r["text"]) for r in
-                big_res.select("url_canon", "text").collect()}
-    assert big_rows == ref_rows and len(big_rows) > 50
+    def spy_join(selected, pages_):
+        # planned now, while the round's persisted frames are cached
+        joined = inner(selected, pages_)
+        joined._jdf.queryExecution().executedPlan()
+        plans.append(joined)
+        return joined
+
+    monkeypatch.setattr(fetch, "_join_pages", spy_join)
+    d = str(tmp_path_factory.mktemp("wh-default-buckets"))
+    cfg = CrawlConfig(warehouse=d, n_bloom_partitions=16,
+                      max_depth=MAX_DEPTH, salt=4)
+    first = run_crawl(spark, cfg, pages, seeds_df(spark, synth_cfg),
+                      robots_df(spark, synth_cfg), max_rounds=1)
+    assert first and cfg.pages_buckets == n_shuffle == 8
+    assert Warehouse(d).pages_bucket_count() == n_shuffle
+    assert len(plans) == 1
+    _assert_bucketed_join_plan(plans[0])
+
+    spark.conf.set("spark.sql.shuffle.partitions", str(n_shuffle * 2))
+    try:
+        cfg2 = CrawlConfig(warehouse=d, n_bloom_partitions=16,
+                           max_depth=MAX_DEPTH, salt=4)
+        resumed = run_crawl(spark, cfg2, pages, max_rounds=1)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", str(n_shuffle))
+    assert cfg2.pages_buckets == n_shuffle
+    assert resumed and len(plans) == 2
+    _assert_bucketed_join_plan(plans[1])
+    assert Warehouse(d).last_committed_round() == 2
 
 
 def test_resume_adopts_pinned_bucket_spec(
@@ -117,8 +143,7 @@ def test_resume_adopts_pinned_bucket_spec(
 ):
     """A resume that omits ``pages_buckets`` must adopt the bucket
     count pinned on disk by the original ingest (like the seen-filter
-    partition count) instead of silently degrading every fetch join
-    to the shuffled plan."""
+    partition count) instead of re-ingesting at another count."""
     d = str(tmp_path_factory.mktemp("wh-adopt"))
     cfg = CrawlConfig(warehouse=d, n_bloom_partitions=16,
                       max_depth=MAX_DEPTH, salt=4, pages_buckets=BUCKETS)
@@ -152,17 +177,12 @@ def test_bucketized_pages_reregisters_on_resume(spark, pages, bucket_wh):
     spark.sql(f"DROP TABLE {name}")  # ≙ session restart
     again = wh.bucketized_pages(pages, BUCKETS)
     assert again.count() == n
-    # and the large-regime join over the re-registered table is still
-    # exchange-free on the pages side (a bare scan would not report
-    # bucketing — autoBucketedScan only engages it when a join benefits)
+    # and the join over the re-registered table is still exchange-free
+    # on the pages side (a bare scan would not report bucketing —
+    # autoBucketedScan only engages it when a join benefits)
     from crawlkit.fetch import _join_pages
 
-    plan = (
-        _join_pages(_selected_frame(spark), again, n_selected=10**9)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "SelectedBucketsCount" in plan, plan
-    assert plan.count("Exchange") == 1, plan
+    _assert_bucketed_join_plan(_join_pages(_selected_frame(spark), again))
     # mismatched bucket count on resume fails loudly
     with pytest.raises(ValueError, match="buckets"):
         wh.bucketized_pages(pages, BUCKETS * 2)

@@ -19,9 +19,9 @@ import pytest
 
 from crawlkit import fetch
 from crawlkit.doctree import doc_to_html
-from crawlkit.extract import extract_document
+from crawlkit.extract import _climb_content_region, extract_document
 from crawlkit.fetch import _extract_partition
-from crawlkit.htmlkit import outer_html, parse_html
+from crawlkit.htmlkit import find_all, outer_html, parse_html
 
 HTML = (
     "\n  <html><head><title>t</title></head><body>"
@@ -72,7 +72,9 @@ def test_stored_html_is_trimmed_canonical_render():
     assert row["html"] == doc_to_html(d.doc).strip()
     # and it is NOT the transient region html (crawler.ts:83), which
     # the reference never stores
-    assert row["html"] != d.content_html
+    root = parse_html(HTML)
+    region = _climb_content_region(find_all(root, "h1"), d.title)
+    assert row["html"] != "".join(outer_html(c) for c in region[0].children)
 
 
 def test_size_guard_is_page_or_content_strictly_greater(monkeypatch):
@@ -129,8 +131,8 @@ def test_region_climb_counts_utf16_units():
     d_climb = extract_document(climb, URL)
     # stopping keeps the region at the title's parent div (no 'outer');
     # climbing reaches <body> and pulls 'outer' in
-    assert "outer" not in d_stop.content_html
-    assert "outer" in d_climb.content_html
+    assert "outer" not in d_stop.text
+    assert "outer" in d_climb.text
 
 
 @pytest.mark.parametrize(

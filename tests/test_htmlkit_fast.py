@@ -107,6 +107,7 @@ def test_edge_case_parity(case):
     assert a == b
 
 
+@pytest.mark.skipif(not SAMPLE.exists(), reason="reference sample absent")
 def test_reference_sample_parity():
     html = SAMPLE.read_text()
     a, b = both(html)

@@ -12,13 +12,16 @@ at both and efficiency = (T_4N / T_N) / 4.  Two modes:
   workers) with true executor-boundary serialization and shuffle, the
   closest in-sandbox proxy to N vs 4N executors under spark-submit.
 
-The corpus is generated ONCE (at full parallelism, untimed) and
-written to parquet; each timed session reads it cold.  Pages use the
-heavy synthetic profile (~24 KB html, ~12 ms extraction) so per-page
-work resembles real web pages rather than fixture stubs; a saturated
-round is the steady-state per-round pipeline (canonicalize → bloom
-anti-join → politeness rank → fetch join → Arrow-batched extraction →
-state commit), not the frontier ramp-up.
+The corpus is generated ONCE (at full parallelism, untimed), written
+to parquet and bucket-clustered on url into a skeleton warehouse; each
+timed session reads it cold from a copy of that skeleton, so no timed
+round pays the bucketize ingest and both legs join against the same
+buckets.  Pages use the heavy synthetic profile (~24 KB html, ~12 ms
+extraction) so per-page work resembles real web pages rather than
+fixture stubs; a saturated round is the steady-state per-round
+pipeline (canonicalize → bloom anti-join → politeness rank → fetch
+join → Arrow-batched extraction → state commit), not the frontier
+ramp-up.
 
 Usage: python tools/bench_scaling.py [n_small] [n_pages]
 Prints one JSON line.
@@ -45,14 +48,31 @@ def synth_cfg(n_pages: int):
     return SynthConfig(n_pages=n_pages, n_hosts=100, n_seeds=10, fanout=4, **HEAVY)
 
 
-def generate_corpus(n_pages: int, out_dir: str) -> None:
+def shuffle_partitions(cores: int) -> int:
+    """3 shuffle tasks per core: at shuffle_partitions == cores the
+    politeness windows and state writes run one task wave, so a single
+    slow task (zstd-heavy partition, GC pause) stretches the whole
+    stage; 3x gives the scheduler room to rebalance.  Same rule for
+    both legs, so the pair stays like-for-like."""
+    return max(3 * cores, 8)
+
+
+def skeleton_of(corpus_dir: str) -> str:
+    return str(Path(corpus_dir).parent / "wh-skeleton")
+
+
+def generate_corpus(n_pages: int, out_dir: str, buckets: int) -> None:
     from crawlkit.session import get_spark
+    from crawlkit.storage import Warehouse
     from crawlkit.synth import synth_pages
 
     spark = get_spark("crawlkit-scale-gen", master="local[32]",
                       shuffle_partitions=32)
     spark.sparkContext.setLogLevel("ERROR")
     synth_pages(spark, synth_cfg(n_pages)).write.mode("overwrite").parquet(out_dir)
+    shutil.rmtree(skeleton_of(out_dir), ignore_errors=True)
+    Warehouse(skeleton_of(out_dir)).bucketized_pages(
+        spark.read.parquet(out_dir), buckets)
     spark.stop()
 
 
@@ -101,14 +121,9 @@ def run_at(cores: int, n_pages: int, corpus_dir: str,
         }
     else:
         master, extra = f"local[{cores}]", None
-    # 3 shuffle tasks per core: at shuffle_partitions == cores the
-    # politeness windows and state writes run one task wave, so a
-    # single slow task (zstd-heavy partition, GC pause) stretches the
-    # whole stage; 3x gives the scheduler room to rebalance.  Same
-    # rule for both legs, so the pair stays like-for-like.
     spark = get_spark(
         f"crawlkit-scale-{cores}", master=master,
-        shuffle_partitions=max(3 * cores, 8), extra_conf=extra,
+        shuffle_partitions=shuffle_partitions(cores), extra_conf=extra,
     )
     spark.sparkContext.setLogLevel("ERROR")
     pages = spark.read.parquet(corpus_dir)
@@ -121,6 +136,7 @@ def run_at(cores: int, n_pages: int, corpus_dir: str,
     )
 
     wh = tempfile.mkdtemp(prefix=f"crawlkit-scale{cores}-")
+    shutil.copytree(skeleton_of(corpus_dir), wh, dirs_exist_ok=True)
     cfg = CrawlConfig(warehouse=wh, round_duration_ms=600_000)
     s0, t0ticks = _cpu_ticks()
     t0 = time.perf_counter()
@@ -148,22 +164,30 @@ def main() -> None:
     # size marker guards against silently measuring a stale corpus of
     # a different n_pages.
     keep_dir = sys.argv[4] if len(sys.argv) > 4 else None
+    # Both legs join against one bucket layout, sized like the 4N leg's
+    # shuffle (run_crawl's default): many more buckets than that add a
+    # fixed per-task cost to every stage downstream of the join.
+    buckets = shuffle_partitions(4 * n_small)
     if keep_dir:
+        from crawlkit.storage import Warehouse
+
         corpus_dir = keep_dir
         marker = Path(corpus_dir).parent / "_n_pages"
         stale = (
             not Path(corpus_dir, "_SUCCESS").exists()
+            or Warehouse(skeleton_of(corpus_dir)).pages_bucket_count()
+            != buckets
             or not marker.exists()
             or marker.read_text().strip() != str(n_pages)
         )
         if stale:
             shutil.rmtree(corpus_dir, ignore_errors=True)
-            generate_corpus(n_pages, corpus_dir)
+            generate_corpus(n_pages, corpus_dir, buckets)
             marker.parent.mkdir(parents=True, exist_ok=True)
             marker.write_text(str(n_pages))
     else:
         corpus_dir = tempfile.mkdtemp(prefix="crawlkit-scale-corpus-") + "/pages"
-        generate_corpus(n_pages, corpus_dir)
+        generate_corpus(n_pages, corpus_dir, buckets)
     # Interleave fresh sessions (N, 4N, N, 4N, ...): each rep is an
     # independent cold app, so machine-level drift (page cache, VM
     # noise) hits both sizes alike; efficiency is computed per adjacent
