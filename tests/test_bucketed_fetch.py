@@ -94,6 +94,21 @@ def test_large_regime_plan_html_never_crosses_exchange(spark, bucket_wh):
     assert joined.count() == 40
 
 
+def test_unknown_size_never_broadcasts(spark, pages):
+    """No selected-set size reaches the join, and none is needed: even
+    over the un-bucketed, cached pages frame (small enough for Spark's
+    own broadcast threshold), the join takes the shuffled plan, never
+    an unbounded broadcast."""
+    from crawlkit.fetch import _join_pages
+
+    plan = (
+        _join_pages(_selected_frame(spark), pages)
+        ._jdf.queryExecution().executedPlan().toString()
+    )
+    assert "BroadcastExchange" not in plan, plan
+    assert "ShuffledHashJoin" in plan, plan
+
+
 def test_default_crawl_buckets_by_shuffle_partitions(
     spark, pages, synth_cfg, tmp_path_factory, monkeypatch
 ):
