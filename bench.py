@@ -19,10 +19,6 @@ Env:
                        per-round crawl number is apples-to-apples)
   BENCH_CRAWL_REPS     crawl reps (default 3; best rep reported, every
                        rep carries its own /proc/stat steal%% window)
-  BENCH_CRAWL_BUCKETS  pages bucket count for the fetch join (default
-                       128, the BASELINE.md A/B winner; buckets >>
-                       cores so bucket-file size, not core count,
-                       drives granularity)
   BENCH_SKIP_CRAWL     set to skip the crawl benchmark
 """
 
@@ -161,8 +157,12 @@ def main() -> None:
         # (at the design point the corpus is bucketed at write time)
         # and is reported separately: it fills a skeleton warehouse
         # that every rep copies, and the rep's crawl adopts its pinned
-        # bucket count.
-        buckets = int(os.environ.get("BENCH_CRAWL_BUCKETS", "128"))
+        # bucket count.  The count is the engine's default
+        # (``pages_buckets=0``: spark.sql.shuffle.partitions): every
+        # stage after the fetch join runs one task per bucket, so many
+        # more buckets than shuffle partitions add a fixed per-task
+        # cost to each of them.
+        buckets = int(spark.conf.get("spark.sql.shuffle.partitions"))
         skeleton = corpus_dir + "-wh"
         t_b = time.perf_counter()
         Warehouse(skeleton).bucketized_pages(pages, buckets).count()

@@ -19,7 +19,9 @@ from __future__ import annotations
 
 from urllib.parse import urlparse, urlunparse, parse_qsl, urlencode, urljoin
 
-__all__ = ["is_valid_url", "canonical_url", "url_host", "resolve_link"]
+__all__ = [
+    "is_valid_url", "canonical_url", "url_host", "url_identity", "resolve_link",
+]
 
 
 def is_valid_url(url: object) -> bool:
@@ -71,6 +73,18 @@ def url_host(url: str) -> str:
     if ":" in host:
         host = host.split(":", 1)[0]
     return host
+
+
+def url_identity(url: object) -> tuple[str, str] | None:
+    """P2 validity + S7 canonicalization + host of one url:
+    ``(url_canon, host)``, or None when the url is invalid.  The one
+    identity kernel of both frontier inputs — seeds
+    (``sparkfns.with_url_identity``) and out-links
+    (``fetch._extract_partition``)."""
+    if not is_valid_url(url):
+        return None
+    url_canon = canonical_url(url)
+    return url_canon, url_host(url_canon)
 
 
 def resolve_link(base_url: str, href: str) -> str:

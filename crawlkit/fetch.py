@@ -6,7 +6,8 @@ canonical url (SURVEY.md J8) — the reference's network fetch
 (``/root/reference/src/crawler.ts:17-110``) replaced by a table scan, so
 byte-identical extraction is what's verified.  Extraction runs in ONE
 ``mapInPandas`` pass over Arrow batches: per batch, the pure-Python
-kernel (``extract.py``) computes title/meta/CBOR/text/canonical-html/links.
+kernel (``extract.py``) computes title/meta/CBOR/text/canonical-html/links,
+and each out-link's identity (``canon.url_identity``).
 
 Shuffle hygiene: only the frontier's narrow key columns are joined into
 the wide pages scan; the MB-scale raw ``html`` bytes never pass through
@@ -27,7 +28,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from . import canon
 from .extract import MAX_CELL_SIZE, extract_document
-from .schema import EXTRACTED_SCHEMA
+from .schema import EXTRACTED_SCHEMA, LINKS_TYPE
 
 
 def make_doc_id(url_canon: str, fetched_ts: datetime) -> bytes:
@@ -66,9 +67,18 @@ def _extract_partition(
             if row.html_bytes is not None:
                 html = bytes(row.html_bytes).decode("utf-8", errors="replace")
                 ex = extract_document(html, row.url_canon, src=row.src)
-                links = [
-                    canon.resolve_link(row.url_canon, href) for href in ex.links
-                ]
+                # Link identity (P2 validity, S7 canonical form, host)
+                # resolves here, while each link is already a Python
+                # string: the round explodes this array and only adds
+                # the JVM-side hash, with no Arrow round-trip of its own.
+                links = []
+                for href in ex.links:
+                    url = canon.resolve_link(row.url_canon, href)
+                    ident = canon.url_identity(url)
+                    if ident is not None:
+                        links.append(
+                            {"url": url, "url_canon": ident[0], "host": ident[1]}
+                        )
                 rec.update(
                     status=ex.status,
                     links=links,
@@ -112,7 +122,7 @@ NARROW_EXTRACTED_SCHEMA = T.StructType(
         T.StructField("url_hash", T.LongType(), True),
         T.StructField("host", T.StringType(), True),
         T.StructField("status", T.StringType(), False),
-        T.StructField("links", T.ArrayType(T.StringType()), True),
+        T.StructField("links", LINKS_TYPE, True),
         T.StructField("depth", T.IntegerType(), False),
     ]
 )

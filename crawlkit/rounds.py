@@ -4,14 +4,20 @@ One round = one DataFrame job DAG:
 
 ``frontier(queued, round=r) → [T3 expiry: stale urls leave the seen
 set (tombstones) and requeue] → P2 validity
-(done at enqueue) → P3 freshness vs latest results → J2 urlseen
-bloom anti-join (exact-confirmed) → W2/T4 salted per-host
+(done at enqueue) → P3 freshness vs the cached expiry candidates →
+J2 urlseen bloom anti-join (exact-confirmed) → W2/T4 salted per-host
 politeness top-k → J8 fetch join against pages → X1-X10 mapInPandas
-extraction → fan-out: results ∥ urlseen delta ∥ frontier delta (links
-+ deferred + retries + expired requeues) ∥ tombstones ∥ metrics``
+extraction, out-link identity included → fan-out: results ∥ urlseen
+delta ∥ frontier delta (links + deferred + retries + expired
+requeues) ∥ tombstones ∥ metrics``
 
 then one atomic manifest commit (T6).  Resume = last committed round +
 1; a crashed round leaves no visible state and re-executes.
+
+A round reads ``results`` only through the expiry scan's
+manifest-pruned old shards, so its cost does not grow with the number
+of stored docs, and each Python stage (extraction, the two bloom
+probes, the bloom rebuild, the robots verdict) runs once per round.
 
 Determinism (north_rule): every operator that picks among equals uses
 an explicit deterministic order — link dedupe is a min-aggregation by
@@ -34,7 +40,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from . import schema
 from .fetch import fetch_extract_write
 from .politeness import politeness_ranked
-from .sparkfns import with_url_identity
+from .sparkfns import url_hash_col, with_url_identity
 from .storage import Warehouse
 from .synth import EPOCH
 from .urlseen import (
@@ -178,20 +184,6 @@ def bootstrap(
     return wh
 
 
-def _latest_results(results: DataFrame) -> DataFrame:
-    """A1/W1: newest row per url_canon (max_by on fetched_ts, id)."""
-    return (
-        results.select("url_canon", "title", "fetched_ts", "id")
-        .groupBy("url_canon")
-        .agg(
-            F.max_by(F.struct("title", "fetched_ts"), F.struct("fetched_ts", "id"))
-            .alias("s")
-        )
-        .select("url_canon", F.col("s.title").alias("prev_title"),
-                F.col("s.fetched_ts").alias("prev_fetched_ts"))
-    )
-
-
 def _expiry_candidates(results_old: DataFrame, expire_cut) -> DataFrame:
     """The expensive half of expiry: newest stored doc per url_hash
     across the manifest-pruned old shards, filtered to the stale
@@ -203,13 +195,13 @@ def _expiry_candidates(results_old: DataFrame, expire_cut) -> DataFrame:
     return (
         results_old.select(
             "url_hash", "url", "url_canon", "host", "depth",
-            "fetched_ts", "round", "id",
+            "fetched_ts", "round", "id", "title",
         )
         .groupBy("url_hash")
         .agg(
             F.max_by(
                 F.struct("url", "url_canon", "host", "depth",
-                         "fetched_ts", "round"),
+                         "fetched_ts", "round", "title"),
                 F.struct("fetched_ts", "id"),
             ).alias("s")
         )
@@ -218,9 +210,58 @@ def _expiry_candidates(results_old: DataFrame, expire_cut) -> DataFrame:
             F.col("s.depth").cast("int").alias("depth"),
             F.col("s.fetched_ts").alias("res_ts"),
             F.col("s.round").cast("int").alias("res_round"),
+            "s.title",
         )
         .where(F.col("res_ts") <= F.lit(expire_cut))
     )
+
+
+def _stored_docs(spark: SparkSession, wh: Warehouse) -> DataFrame | None:
+    """The newest stored doc of every queued url that can have one —
+    P3 freshness's only input besides the frontier — or None when no
+    queued url can have a stored doc.
+
+    A queued url has a stored doc only if expiry requeued it, or a link
+    rediscovered it after its tombstone.  Either way that doc went
+    through an expiry candidate scan, and no newer doc exists (a
+    refetch would make the url seen and fresh again).  So the committed
+    ``expiry_cand`` tables hold every doc P3 can need, and a crawl that
+    never committed one (expiry never ran) skips P3 outright.
+
+    Which tables: a scan covers every shard committed before it with
+    ts <= its cutoff, so the newest scan covers every earlier scan with
+    a cutoff no later than its own.  While ``now`` only moves forward
+    that is all of them and P3 reads ONE table.  When a resume moved
+    ``now`` backwards, earlier scans with a later cutoff are read too,
+    and the newest doc per url is taken across them."""
+    scans = wh.extras("expiry_scan")
+    if not scans:
+        return None
+    newest_round, newest_sig = scans[-1]
+    rounds = [newest_round] + [
+        r for r, sig in scans[:-1] if sig["cutoff"] > newest_sig["cutoff"]
+    ]
+    docs = wh.read(spark, "expiry_cand", schema.EXPIRY_CAND_SCHEMA,
+                   rounds=rounds).select("url_hash", "url_canon", "title",
+                                         "res_ts", "res_round")
+    if len(rounds) > 1:
+        docs = docs.groupBy("url_hash", "url_canon").agg(
+            F.max_by(F.struct("title", "res_ts"),
+                     F.struct("res_ts", "res_round")).alias("s")
+        ).select("url_hash", "url_canon", "s.title", "s.res_ts")
+    return docs
+
+
+def _fresh_filter(queued: DataFrame, docs: DataFrame, fresh_cut) -> DataFrame:
+    """P3: drop queued urls whose newest stored doc is titled and
+    fetched after ``fresh_cut`` (reference freshness window,
+    src/db/model.ts:45-50)."""
+    fresh = docs.where(
+        F.col("title").isNotNull()
+        & (F.col("title") != "")
+        & (F.col("res_ts") > F.lit(fresh_cut))
+    ).select("url_hash", "url_canon")
+    return queued.join(fresh, ["url_hash", "url_canon"], "left_anti")
 
 
 def _filter_stale(
@@ -295,15 +336,17 @@ def run_round(
             exact,
             wh.read(spark, "urlseen_evicted", schema.URLSEEN_EVICTED_SCHEMA),
         )
-    results_prev = wh.read(spark, "results", schema.RESULTS_SCHEMA)
+    # P3 needs only committed scans: every queued url was enqueued by
+    # an earlier round.
+    stored_docs = _stored_docs(spark, wh)
 
     queued = queued.persist()
     metrics: dict[str, int] = {"queued": queued.count()}
     tick("read+queued.count")
 
     # Manifest-metadata short-circuits (no Spark jobs): round 1 of any
-    # crawl has no stored results and no seen-set — skip the freshness
-    # join and the bloom probe entirely instead of cogrouping with
+    # crawl has no stored results and no seen-set — skip the expiry
+    # scan and the bloom probe entirely instead of cogrouping with
     # empty state.
     have_results = bool(wh.committed_rounds("results"))
     have_seen = bool(wh.committed_rounds("urlseen_exact"))
@@ -380,21 +423,11 @@ def run_round(
         return probe_unseen(df, bloom_state, exact, cfg.n_bloom_partitions)
 
     # P3 freshness: skip urls whose latest stored doc is titled & fresh
-    fresh_cut = cfg.now - timedelta(days=cfg.fresh_days)
-    if have_results:
-        cand = (
-            queued.join(_latest_results(results_prev), "url_canon", "left")
-            .where(
-                ~(
-                    F.col("prev_title").isNotNull()
-                    & (F.col("prev_title") != "")
-                    & (F.col("prev_fetched_ts") > F.lit(fresh_cut))
-                )
-            )
-            .drop("prev_title", "prev_fetched_ts")
+    cand = queued
+    if stored_docs is not None:
+        cand = _fresh_filter(
+            queued, stored_docs, cfg.now - timedelta(days=cfg.fresh_days)
         )
-    else:
-        cand = queued
 
     # J2 URL-seen anti-join (bloom + exact confirm).  Persisted: the
     # politeness split references it for both selected and deferred.
@@ -412,8 +445,6 @@ def run_round(
     deferred = ranked.where(~F.col("is_selected")).drop(
         "is_selected", "host_rank"
     )
-    metrics["selected"] = selected.count()
-    tick("probe+politeness+selected.count")
 
     # J8 + X1-X10 fetch & extract.  The wide results (CBOR content,
     # region html, text) are written to the round's results shard
@@ -425,8 +456,6 @@ def run_round(
         selected, pages, wh.staging_sink("results", round_no),
         round_no, cfg.now,
     ).persist()
-
-    ok = extracted.where(F.col("status") == "ok")
 
     # Terminal outcomes (ok / not_found / too_large) enter the seen set;
     # fetch failures do NOT (S5: lock released so retries can happen).
@@ -441,15 +470,19 @@ def run_round(
     )
 
     # Frontier growth: out-links of ok pages, deduped deterministically,
-    # minus (seen ∪ just-fetched ∪ still-queued deferred/retries).
+    # minus (seen ∪ just-fetched ∪ still-queued deferred/retries).  The
+    # extraction task already validated and canonicalized every link;
+    # only the hash is added here, JVM-side.
     links = (
-        ok.select(F.explode("links").alias("url"), F.col("depth"))
-        .withColumn("depth", (F.col("depth") + 1).cast("int"))
-        .where(F.col("depth") <= cfg.max_depth)
+        extracted.where(
+            (F.col("status") == "ok") & (F.col("depth") + 1 <= cfg.max_depth)
+        )
+        .select(F.inline("links"),
+                (F.col("depth") + 1).cast("int").alias("depth"))
+        .withColumn("url_hash", url_hash_col("url_canon"))
     )
     link_cand = (
-        with_url_identity(links)
-        .groupBy("url_canon", "url_hash", "host")
+        links.groupBy("url_canon", "url_hash", "host")
         .agg(F.min("url").alias("url"), F.min("depth").alias("depth"))
         .withColumn("priority", F.lit(0.0))
         .withColumn("retry_count", F.lit(0))
@@ -497,25 +530,29 @@ def run_round(
     frontier_delta = _dedupe_frontier(growth, round_no + 1)
 
     # -- persist + atomic commit (T6) ------------------------------------
-    # Materializing the narrow frame runs extraction AND the in-task
-    # wide results-shard writes in one pass.
-    metrics["results"] = ok.count()
-    tick("extract+results.write")
-    # The three state writes are independent (distinct tables, all
-    # reading only persisted frames), so submit them from worker
-    # threads: Spark schedules concurrently-submitted jobs in parallel,
-    # overlapping each job's fixed scheduling latency and letting small
-    # final-stage tails share the cluster instead of serializing.  The
-    # per-partition lineage aggregation (a tiny frame off the persisted
-    # extraction output) rides along in the same window.  Any failure
-    # re-raises here — before commit_round — so a partial write is
-    # never published.
-    part_agg = extracted.groupBy(
+    # The per-partition lineage collect (north_rule "resumable ... with
+    # per-partition lineage + metrics": one row per physical partition
+    # of the fetch+extract output, so an operator can localize
+    # data-quality or straggler issues) is the action that materializes
+    # the narrow frame, running extraction AND the in-task wide
+    # results-shard writes in one pass.  Its ok-row sum is the round's
+    # results count.
+    part_rows = extracted.groupBy(
         F.spark_partition_id().alias("partition_id")
     ).agg(
         F.count("*").alias("rows_in"),
         F.sum(F.when(F.col("status") == "ok", 1).otherwise(0)).alias("rows_out"),
-    )
+    ).collect()
+    metrics["results"] = sum(int(r["rows_out"]) for r in part_rows)
+    tick("probe+politeness+extract+results.write")
+    # The state writes are independent (distinct tables, all reading
+    # only persisted frames), so submit them from worker threads: Spark
+    # schedules concurrently-submitted jobs in parallel, overlapping
+    # each job's fixed scheduling latency and letting small final-stage
+    # tails share the cluster instead of serializing.  The selected
+    # count (a filter over the persisted politeness frame) rides along
+    # in the same window.  Any failure re-raises here — before
+    # commit_round — so a partial write is never published.
     with ThreadPoolExecutor(max_workers=5) as pool:
         write_futs = [
             pool.submit(wh.write, new_seen, "urlseen_exact", round_no),
@@ -529,10 +566,10 @@ def run_round(
             write_futs.append(
                 pool.submit(wh.write, tomb_delta, "urlseen_evicted", round_no)
             )
-        part_fut = pool.submit(part_agg.collect)
+        selected_fut = pool.submit(selected.count)
         for fut in write_futs:
             fut.result()
-        part_rows_local = part_fut.result()
+        metrics["selected"] = selected_fut.result()
     tick("state.writes(parallel)")
 
     # Post-write row counts come from the staged parquet FOOTERS (no
@@ -541,17 +578,13 @@ def run_round(
     metrics["new_seen"] = wh.row_count("urlseen_exact", round_no)
     metrics["frontier_delta"] = wh.row_count("frontier", round_no)
     tick("counts")
-    # Per-partition lineage for the extraction stage (north_rule
-    # "resumable ... with per-partition lineage + metrics"): one row
-    # per physical partition of the fetch+extract output, so an
-    # operator can localize data-quality or straggler issues.
     all_rows = [
         (round_no, None, stage, None, int(v), None)
         for stage, v in metrics.items()
     ] + [
         (round_no, int(r["partition_id"]), "extract_partition",
          int(r["rows_in"]), int(r["rows_out"]), None)
-        for r in part_rows_local
+        for r in part_rows
     ]
     wh.write(spark.createDataFrame(all_rows, schema.METRICS_SCHEMA),
              "metrics", round_no)

@@ -94,7 +94,8 @@ URLSEEN_EVICTED_SCHEMA = T.StructType(
 # the newest stored doc per url_hash within the manifest-pruned old
 # results shards.  Valid for as long as the (pruned round set, cutoff)
 # signature recorded with it in the manifest matches — see
-# Warehouse.latest_extra("expiry_scan").
+# Warehouse.latest_extra("expiry_scan").  Also P3 freshness's input
+# (rounds._stored_docs), hence ``title``.
 EXPIRY_CAND_SCHEMA = T.StructType(
     [
         T.StructField("url_hash", T.LongType(), False),
@@ -104,6 +105,7 @@ EXPIRY_CAND_SCHEMA = T.StructType(
         T.StructField("depth", T.IntegerType(), True),
         T.StructField("res_ts", T.TimestampType(), True),
         T.StructField("res_round", T.IntegerType(), True),
+        T.StructField("title", T.StringType(), True),
     ]
 )
 
@@ -127,6 +129,19 @@ METRICS_SCHEMA = T.StructType(
     ]
 )
 
+# Out-links of one extracted page, identity already resolved in the
+# extraction task (canon.url_identity): the resolved url, its canonical
+# form and host.  Invalid links are dropped there.
+LINKS_TYPE = T.ArrayType(
+    T.StructType(
+        [
+            T.StructField("url", T.StringType(), False),
+            T.StructField("url_canon", T.StringType(), False),
+            T.StructField("host", T.StringType(), False),
+        ]
+    )
+)
+
 # Output schema of the fetch+extract mapInPandas stage.
 EXTRACTED_SCHEMA = T.StructType(
     [
@@ -143,7 +158,7 @@ EXTRACTED_SCHEMA = T.StructType(
         T.StructField("page_len", T.LongType(), True),
         T.StructField("text", T.StringType(), True),
         T.StructField("lang", T.StringType(), True),
-        T.StructField("links", T.ArrayType(T.StringType()), True),
+        T.StructField("links", LINKS_TYPE, True),
         T.StructField("depth", T.IntegerType(), False),
     ]
 )

@@ -13,20 +13,21 @@ from pyspark.sql import Column, DataFrame, functions as F, types as T
 
 from . import canon
 
-
-@F.pandas_udf(T.StringType())
-def canonical_url_udf(urls: pd.Series) -> pd.Series:
-    return urls.map(lambda u: canon.canonical_url(u) if isinstance(u, str) else None)
-
-
-@F.pandas_udf(T.BooleanType())
-def is_valid_url_udf(urls: pd.Series) -> pd.Series:
-    return urls.map(canon.is_valid_url)
+_IDENTITY = T.StructType(
+    [
+        T.StructField("url_canon", T.StringType(), True),
+        T.StructField("host", T.StringType(), True),
+    ]
+)
 
 
-@F.pandas_udf(T.StringType())
-def url_host_udf(urls: pd.Series) -> pd.Series:
-    return urls.map(lambda u: canon.url_host(u) if isinstance(u, str) else None)
+def _url_identity(urls: pd.Series) -> pd.DataFrame:
+    """``canon.url_identity`` per url; both fields null when invalid."""
+    ids = [canon.url_identity(u) or (None, None) for u in urls]
+    return pd.DataFrame(ids, columns=["url_canon", "host"])
+
+
+url_identity_udf = F.pandas_udf(_url_identity, _IDENTITY).asNondeterministic()
 
 
 def url_hash_col(url_canon: Column | str) -> Column:
@@ -39,11 +40,19 @@ def with_url_identity(df: DataFrame, url_col: str = "url") -> DataFrame:
     """P2 validity + S7 canonicalization + hash + host, as columns.
 
     Invalid URLs are *filtered out* (reference rejects them with 400,
-    ``src/api.ts:62-64``).
+    ``src/api.ts:62-64``).  One Arrow round-trip: validity, canonical
+    form and host come back together from ``url_identity_udf``.  The
+    UDF is marked nondeterministic only so the optimizer cannot push
+    the validity filter below it and evaluate it twice (once in the
+    filter, once in the projection); its output is a pure function of
+    the url.
     """
+    ident = "_url_identity"
     return (
-        df.where(is_valid_url_udf(F.col(url_col)))
-        .withColumn("url_canon", canonical_url_udf(F.col(url_col)))
+        df.withColumn(ident, url_identity_udf(F.col(url_col)))
+        .where(F.col(f"{ident}.url_canon").isNotNull())
+        .withColumn("url_canon", F.col(f"{ident}.url_canon"))
         .withColumn("url_hash", url_hash_col("url_canon"))
-        .withColumn("host", url_host_udf(F.col("url_canon")))
+        .withColumn("host", F.col(f"{ident}.host"))
+        .drop(ident)
     )

@@ -217,18 +217,22 @@ class Warehouse:
     def last_committed_round(self) -> int | None:
         return self._read_manifest()["last_round"]
 
-    def latest_extra(self, key: str) -> tuple[int, object] | None:
-        """(round_no, value) from the NEWEST committed round whose
-        manifest entry carries ``key`` (written via ``commit_round``'s
-        ``extra``), or None.  Reading from the manifest keeps the
+    def extras(self, key: str) -> list[tuple[int, object]]:
+        """(round_no, value) of every committed round whose manifest
+        entry carries ``key`` (written via ``commit_round``'s
+        ``extra``), oldest first.  Reading from the manifest keeps the
         lookup a metadata operation — no Spark job, no data scan."""
         manifest = self._read_manifest()
-        hits = [
+        return sorted(
             (int(r), info[key])
             for r, info in manifest["rounds"].items()
             if key in info
-        ]
-        return max(hits, key=lambda rv: rv[0]) if hits else None
+        )
+
+    def latest_extra(self, key: str) -> tuple[int, object] | None:
+        """The newest of :meth:`extras`, or None."""
+        hits = self.extras(key)
+        return hits[-1] if hits else None
 
     def committed_rounds(self, table: str) -> list[int]:
         manifest = self._read_manifest()
@@ -321,10 +325,13 @@ class Warehouse:
         so EnsureRequirements shuffles only the narrow frontier side
         into the bucketing.
 
-        Cost model: the one-time ingest writes each input task's rows
-        into per-bucket files (task-local sort by bucket id, NO
-        shuffle); every subsequent round reads co-partitioned — the
-        classic write-once/join-forever trade.
+        Cost model: the one-time ingest shuffles the corpus once, into
+        the bucket partitioning, so each write task holds exactly one
+        bucket and writes ONE file for it (without it, every input
+        task writes a file per bucket it touches: input tasks ×
+        buckets small files for every later scan to open); every
+        subsequent round reads co-partitioned — the classic
+        write-once/join-forever trade.
 
         Idempotent ensure: (a) table already in the session catalog →
         reuse; (b) data on disk from a previous session (resume) →
@@ -359,7 +366,8 @@ class Warehouse:
             )
             return spark.table(name)
         (
-            pages.write.format("parquet")
+            pages.repartition(buckets, "url")
+            .write.format("parquet")
             .bucketBy(buckets, "url")
             .option("path", str(loc))
             .mode("overwrite")

@@ -14,11 +14,12 @@ semantics (SURVEY.md §4.2):
 Scale shape: candidates are co-grouped with their filter partition
 (``cogroup.applyInPandas`` — only the touched partitions move), the
 filter knocks out the ~99% already-seen mass, and only surviving hits
-pay the exact anti-join.  Partitions rebuild from the exact set only
-when over-full (amortized O(1) per insert).  Recrawl expiry never
-touches the filter: an evicted url's bits stay set, so it lands among
-the filter hits and the exact anti-join (over the tombstone-filtered
-set, `effective_exact`) reports it unseen.
+can match in the exact anti-join (its condition requires a hit).
+Partitions rebuild from the exact set only when over-full (amortized
+O(1) per insert).  Recrawl expiry never touches the filter: an
+evicted url's bits stay set, so it lands among the filter hits and
+the exact anti-join (over the tombstone-filtered set,
+`effective_exact`) reports it unseen.
 """
 
 from __future__ import annotations
@@ -149,12 +150,16 @@ def probe_unseen(
         .cogroup(bloom_state.groupBy("partition_id"))
         .applyInPandas(probe, out_schema)
     )
-    definitely_new = probed.where(~F.col("maybe_seen"))
-    confirmed_new = probed.where(F.col("maybe_seen")).join(
-        exact_seen.select("url_hash"), "url_hash", "left_anti"
-    )
-    drop = ["partition_id", "maybe_seen"]
-    return definitely_new.drop(*drop).unionByName(confirmed_new.drop(*drop))
+    # ONE consumer of the cogroup: a filter miss can never match (the
+    # join condition requires maybe_seen), so only filter hits are
+    # checked against the exact set.  Two filtered branches unioned
+    # would plan the cogroup, and everything above it, once per branch.
+    exact = exact_seen.select(F.col("url_hash").alias("_seen_hash"))
+    return probed.join(
+        exact,
+        F.col("maybe_seen") & (F.col("url_hash") == F.col("_seen_hash")),
+        "left_anti",
+    ).drop("partition_id", "maybe_seen")
 
 
 def updated_bloom_partitions(

@@ -83,6 +83,15 @@ def _assert_bucketed_join_plan(df) -> None:
     assert "SelectedBucketsCount" in scan.toString(), root.toString()
 
 
+def test_fresh_ingest_writes_one_file_per_bucket(pages, bucket_wh):
+    """The ingest shuffles into the bucket partitioning first, so each
+    bucket is one file, not one file per input task per bucket."""
+    wh, _ = bucket_wh
+    assert pages.rdd.getNumPartitions() > 1  # else one file per bucket anyway
+    files = list((wh.root / "pages_bucketed").glob("*.parquet"))
+    assert 0 < len(files) <= BUCKETS, len(files)
+
+
 def test_large_regime_plan_html_never_crosses_exchange(spark, bucket_wh):
     """The done-criterion plan audit on the 16-bucket fixture."""
     from crawlkit.fetch import _join_pages

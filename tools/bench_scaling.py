@@ -12,7 +12,8 @@ at both and efficiency = (T_4N / T_N) / 4.  Two modes:
   workers) with true executor-boundary serialization and shuffle, the
   closest in-sandbox proxy to N vs 4N executors under spark-submit.
 
-The corpus is generated ONCE (at full parallelism, untimed), written
+The corpus is generated ONCE (at full parallelism, untimed, in a child
+process whose JVM exits before the timed legs start), written
 to parquet and bucket-clustered on url into a skeleton warehouse; each
 timed session reads it cold from a copy of that skeleton, so no timed
 round pays the bucketize ingest and both legs join against the same
@@ -62,6 +63,21 @@ def skeleton_of(corpus_dir: str) -> str:
 
 
 def generate_corpus(n_pages: int, out_dir: str, buckets: int) -> None:
+    """Generate and bucketize the corpus in a child process.  Its
+    local[32] session grows the driver heap to ~7 GB, and a stopped
+    session in THIS process would keep that JVM (and its heap) alive
+    through both timed legs; the child's JVM exits with it."""
+    import multiprocessing
+
+    child = multiprocessing.get_context("spawn").Process(
+        target=_generate_corpus, args=(n_pages, out_dir, buckets))
+    child.start()
+    child.join()
+    if child.exitcode != 0:
+        raise RuntimeError(f"corpus generation failed (exit {child.exitcode})")
+
+
+def _generate_corpus(n_pages: int, out_dir: str, buckets: int) -> None:
     from crawlkit.session import get_spark
     from crawlkit.storage import Warehouse
     from crawlkit.synth import synth_pages
