@@ -80,7 +80,7 @@ def url_identity(url: object) -> tuple[str, str] | None:
     ``(url_canon, host)``, or None when the url is invalid.  The one
     identity kernel of both frontier inputs — seeds
     (``sparkfns.with_url_identity``) and out-links
-    (``fetch._extract_partition``)."""
+    (``fetch.extract_batch``)."""
     if not is_valid_url(url):
         return None
     url_canon = canonical_url(url)

@@ -12,7 +12,10 @@ and its normalize/persist stage (``/root/reference/src/api.ts:94-113``):
 * X5 content-region climb: start at the title's parent, climb up to two
   more ancestors while the region text is shorter than 2× the title.
 * X6–X8: region → amended node tree → canonical HTML.
-* X9 canonical-CBOR content bytes.
+* X9 canonical-CBOR content bytes, then the reference's save() size
+  guard (``src/db/model.ts:142-147``): an oversized page or content
+  cell makes the row ``too_large``, so the kernel alone decides
+  which rows are stored.
 * plus the pinned plain-text projection (the byte-parity column) and
   out-link harvesting for the frontier (the reference is a single-URL
   service; link discovery is the batch-crawl generalisation).
@@ -54,7 +57,7 @@ MAX_CELL_SIZE = 1024 * 1024 - 1  # reference src/db/model.ts:7
 class Extracted:
     url: str
     src: str
-    status: str  # 'ok' | 'not_found'
+    status: str  # 'ok' | 'not_found' | 'too_large'
     title: str = ""
     meta: dict[str, str] = field(default_factory=dict)
     # utf-8 byte length of the full serialized page, trimmed —
@@ -66,17 +69,13 @@ class Extracted:
     content_cbor: bytes = b""  # X9
     text: str = ""  # pinned parity column
     links: list[str] = field(default_factory=list)
-    # amended doc tree (X7); the X8 canonical html is rendered from it
-    # on access.  The fetch stage renders it for every stored ok row
-    # (the results ``html`` column, setHTML(toHTML(obj)) in
-    # api.ts:96-102); not_found and too_large rows never pay for it
+    # amended doc tree (X7) of an ok row
     doc: dict | None = field(default=None, repr=False)
-
-    @property
-    def canonical_html(self) -> str:
-        """X8 re-render of the amended tree (reference
-        ``src/tiptap.ts`` generateHTML)."""
-        return doc_to_html(self.doc) if self.doc is not None else ""
+    # The stored html column of an ok row: the X8 canonical re-render
+    # of ``doc`` (reference ``src/tiptap.ts`` generateHTML), trimmed —
+    # setHTML(toHTML(obj)), api.ts:96-102 + model.ts:73-75.  "" for
+    # every other status: not_found and too_large rows never render.
+    canonical_html: str = field(default="", repr=False)
 
 
 def _harvest_meta(root: HElement) -> tuple[dict[str, str], str | None]:
@@ -167,8 +166,16 @@ def extract_document(html: str, url: str, src: str | None = None) -> Extracted:
     )
     amend_node(doc, DeterministicIds(url))
 
-    # X9 + pinned text (X8 canonical html renders lazily from .doc)
+    # X9, then the reference's save() guard (model.ts:142-147): the
+    # trimmed PAGE bytes or the CBOR content bytes, strictly greater
+    # than the cell cap, reject the row — not the region html, which
+    # the reference never stores.  Checked before the text and the
+    # render, so a rejected row never pays for either.
     content_cbor = cborlite.dumps(doc)
+    links = _harvest_links(root)
+    if page_len > MAX_CELL_SIZE or len(content_cbor) > MAX_CELL_SIZE:
+        return Extracted(url=url, src=src, status="too_large",
+                         page_len=page_len, links=links)
     text = doc_to_text(doc)
 
     # setTitle at persist (model.ts:56-61): interior newlines become
@@ -188,6 +195,7 @@ def extract_document(html: str, url: str, src: str | None = None) -> Extracted:
         page_len=page_len,
         content_cbor=content_cbor,
         text=text,
-        links=_harvest_links(root),
+        links=links,
         doc=doc,
+        canonical_html=doc_to_html(doc).strip(),
     )

@@ -5,9 +5,11 @@ frontier against the Common-Crawl-style ``pages`` table on the
 canonical url (SURVEY.md J8) — the reference's network fetch
 (``/root/reference/src/crawler.ts:17-110``) replaced by a table scan, so
 byte-identical extraction is what's verified.  Extraction runs in ONE
-``mapInPandas`` pass over Arrow batches: per batch, the pure-Python
-kernel (``extract.py``) computes title/meta/CBOR/text/canonical-html/links,
-and each out-link's identity (``canon.url_identity``).
+``mapInPandas`` pass over Arrow batches: per batch, ``extract_batch``
+runs the pure-Python kernel (``extract.py``) once per page — it computes
+title/meta/CBOR/text/canonical-html/links and decides whether the row
+is stored — and resolves each out-link's identity
+(``canon.url_identity``).
 
 Shuffle hygiene: only the frontier's narrow key columns are joined into
 the wide pages scan; the MB-scale raw ``html`` bytes never pass through
@@ -27,8 +29,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from . import canon
-from .extract import MAX_CELL_SIZE, extract_document
-from .schema import EXTRACTED_SCHEMA, LINKS_TYPE
+from .extract import extract_document
+from .schema import NARROW_EXTRACTED_SCHEMA, RESULTS_SCHEMA
 
 
 def make_doc_id(url_canon: str, fetched_ts: datetime) -> bytes:
@@ -40,118 +42,83 @@ def make_doc_id(url_canon: str, fetched_ts: datetime) -> bytes:
     return ts + hashlib.blake2b(url_canon.encode(), digest_size=8).digest()
 
 
-def _extract_partition(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    cols = [f.name for f in EXTRACTED_SCHEMA.fields]
-    for pdf in batches:
-        out: list[dict] = []
-        for row in pdf.itertuples(index=False):
-            rec = {
-                "url": row.url_canon,
-                "url_canon": row.url_canon,
-                "url_hash": row.url_hash,
-                "host": row.host,
-                "src": row.src,
-                "status": "fetch_failed",
-                "title": None,
-                "meta": None,
-                "content": None,
-                "html": None,
-                "page_len": None,
-                "text": None,
-                "lang": row.lang,
-                "links": None,
-                "depth": row.depth,
-            }
-            if row.html_bytes is not None:
-                html = bytes(row.html_bytes).decode("utf-8", errors="replace")
-                ex = extract_document(html, row.url_canon, src=row.src)
-                # Link identity (P2 validity, S7 canonical form, host)
-                # resolves here, while each link is already a Python
-                # string: the round explodes this array and only adds
-                # the JVM-side hash, with no Arrow round-trip of its own.
-                links = []
-                for href in ex.links:
-                    url = canon.resolve_link(row.url_canon, href)
-                    ident = canon.url_identity(url)
-                    if ident is not None:
-                        links.append(
-                            {"url": url, "url_canon": ident[0], "host": ident[1]}
-                        )
-                rec.update(
-                    status=ex.status,
-                    links=links,
-                    page_len=ex.page_len,
+def extract_batch(
+    pdf: pd.DataFrame, fetched_ts: datetime, round_no: int
+) -> tuple[pd.DataFrame, dict[str, list]]:
+    """Run the kernel over one fetch-joined batch: ONE pass per row.
+
+    Returns the narrow frame (``NARROW_EXTRACTED_SCHEMA``, every row)
+    and the ``RESULTS_SCHEMA`` columns of the rows the kernel decided
+    to store (status ok), ready for ``pa.Table.from_pydict``.  A row
+    with no page (null ``html_bytes``) is fetch_failed."""
+    statuses: list[str] = []
+    links: list[list[dict] | None] = []
+    # The stored rows' kernel columns, taken field by field: keeping
+    # each Extracted (with its doc tree) alive until the batch ends
+    # makes every cyclic-GC pass walk the whole batch's trees (GC time
+    # 0.87-1.21 against 0.49-0.69 ms/page over 500 bench-weight pages,
+    # 4-vCPU host).
+    title, meta, content, html_col, page_len, text = [], [], [], [], [], []
+    for row in pdf.itertuples(index=False):
+        if row.html_bytes is None:
+            statuses.append("fetch_failed")
+            links.append(None)
+            continue
+        html = bytes(row.html_bytes).decode("utf-8", errors="replace")
+        ex = extract_document(html, row.url_canon, src=row.src)
+        statuses.append(ex.status)
+        # Out-link identity (P2 validity, S7 canonical form, host)
+        # resolves here, while each link is already a Python string:
+        # the round explodes this array and only adds the JVM-side
+        # hash, with no Arrow round-trip of its own.
+        page_links = []
+        for href in ex.links:
+            url = canon.resolve_link(row.url_canon, href)
+            ident = canon.url_identity(url)
+            if ident is not None:
+                page_links.append(
+                    {"url": url, "url_canon": ident[0], "host": ident[1]}
                 )
-                if ex.status == "ok":
-                    if (
-                        ex.page_len > MAX_CELL_SIZE
-                        or len(ex.content_cbor) > MAX_CELL_SIZE
-                    ):
-                        # save() guards the trimmed PAGE bytes and the
-                        # CBOR content bytes, strictly greater-than
-                        # (model.ts:142-147) — not the region html,
-                        # which the reference never stores
-                        rec["status"] = "too_large"
-                    else:
-                        rec.update(
-                            title=ex.title,
-                            meta=ex.meta,
-                            content=ex.content_cbor,
-                            # the stored html column is the CANONICAL
-                            # re-render of the amended tree, trimmed —
-                            # setHTML(toHTML(obj)), api.ts:96-102 +
-                            # model.ts:73-75; the X5 region html is
-                            # transient parse input (crawler.ts:83)
-                            html=ex.canonical_html.strip(),
-                            text=ex.text,
-                        )
-            out.append(rec)
-        yield pd.DataFrame(out, columns=cols)
-
-
-from pyspark.sql import types as T
-
-# What the round pipeline actually needs back from extraction when the
-# wide results are written in-task: link-growth and status bookkeeping.
-NARROW_EXTRACTED_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("url_canon", T.StringType(), True),
-        T.StructField("url_hash", T.LongType(), True),
-        T.StructField("host", T.StringType(), True),
-        T.StructField("status", T.StringType(), False),
-        T.StructField("links", LINKS_TYPE, True),
-        T.StructField("depth", T.IntegerType(), False),
-    ]
-)
-
-
-def _results_arrow_schema():
-    import pyarrow as pa
-
-    return pa.schema(
-        [
-            ("id", pa.binary()),
-            ("url", pa.string()),
-            ("url_canon", pa.string()),
-            ("url_hash", pa.int64()),
-            ("host", pa.string()),
-            ("src", pa.string()),
-            ("title", pa.string()),
-            ("meta", pa.map_(pa.string(), pa.string())),
-            ("content", pa.binary()),
-            ("html", pa.string()),
-            ("page_len", pa.int64()),
-            ("text", pa.string()),
-            ("lang", pa.string()),
-            ("status", pa.string()),
-            ("depth", pa.int32()),
-            ("fetched_ts", pa.timestamp("us", tz="UTC")),
-            ("round", pa.int32()),
-        ]
-    )
+        links.append(page_links)
+        if ex.status == "ok":
+            title.append(ex.title)
+            meta.append(list(ex.meta.items()))
+            content.append(ex.content_cbor)
+            html_col.append(ex.canonical_html)
+            page_len.append(ex.page_len)
+            text.append(ex.text)
+    narrow = pd.DataFrame({
+        "url": pdf["url_canon"],
+        "url_canon": pdf["url_canon"],
+        "url_hash": pdf["url_hash"],
+        "host": pdf["host"],
+        "status": statuses,
+        "links": links,
+        "depth": pdf["depth"],
+    })
+    kept = pdf.loc[[s == "ok" for s in statuses]]
+    urls = kept["url_canon"].tolist()
+    n = len(urls)
+    results = {
+        "id": [make_doc_id(u, fetched_ts) for u in urls],
+        "url": urls,
+        "url_canon": urls,
+        "url_hash": kept["url_hash"].tolist(),
+        "host": kept["host"].tolist(),
+        "src": kept["src"].tolist(),
+        "title": title,
+        "meta": meta,
+        "content": content,
+        "html": html_col,
+        "page_len": page_len,
+        "text": text,
+        "lang": kept["lang"].tolist(),
+        "status": ["ok"] * n,
+        "depth": kept["depth"].tolist(),
+        "fetched_ts": [fetched_ts] * n,
+        "round": [round_no] * n,
+    }
+    return narrow, results
 
 
 def fetch_extract_write(
@@ -172,18 +139,16 @@ def fetch_extract_write(
     in-task keeps the wide bytes in one pass; Spark only ever shuffles
     the narrow link/status columns.
 
-    ``sink`` is a :class:`crawlkit.storage.ShardSink` (from
-    ``Warehouse.staging_sink``): it owns the write protocol —
-    overwrite-by-task-id idempotence, object-store-safe paths, and
-    manifest-gated visibility — so this function holds no filesystem
-    assumptions.  Speculative execution must stay off (asserted here,
-    off by default): a speculative twin racing the original on the
-    same shard name could tear a shard.  The caller obtains the sink
-    per attempt; ``staging_sink`` wipes orphan shards of a crashed
-    previous attempt, whose task layout may have differed.
+    ``sink`` is a :class:`crawlkit.storage.ShardSink` from
+    ``Warehouse.staging_sink``, obtained per attempt: it owns the write
+    protocol, so this function holds no filesystem assumptions.
+    Speculative execution must stay off (asserted here, off by
+    default): a speculative twin racing the original on the same shard
+    name could tear a shard.
     """
     import pyarrow as pa
     from pyspark import TaskContext
+    from pyspark.sql.pandas.types import to_arrow_schema
 
     if (
         selected.sparkSession.conf.get("spark.speculation", "false").lower()
@@ -193,56 +158,30 @@ def fetch_extract_write(
             "fetch_extract_write writes one shard per task id and is not "
             "safe under speculative execution; set spark.speculation=false"
         )
-    narrow_cols = [f.name for f in NARROW_EXTRACTED_SCHEMA.fields]
+    arrow_schema = to_arrow_schema(RESULTS_SCHEMA)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # Incremental shard write: Arrow batches stream into the shard
-        # in byte-bounded row groups (ShardWriter buffers to
-        # CRAWLKIT_ROW_GROUP_BYTES then flushes one group), so the
-        # worker holds O(row-group target) wide bytes — never the
-        # task's whole shard (O(task-share) would be gigabytes at the
-        # design point).  Opened lazily: a task with no ok rows leaves
-        # no file; a task whose generator is closed EARLY (partial-
+        # Each batch's stored rows stream into the task's shard
+        # (ShardSink.open_writer bounds the wide bytes held to one row
+        # group).  Opened lazily: a task with no ok rows leaves no
+        # file; a task whose generator is closed EARLY (partial-
         # consumption action) aborts the shard rather than finalizing
         # a valid-looking footer over a truncated prefix — so a shard
         # file exists iff its task ran to completion.
         writer = None
         completed = False
-        arrow_schema = _results_arrow_schema()
         try:
-            for pdf in _extract_partition(batches):
-                ok = pdf[pdf["status"] == "ok"]
-                wide: list[dict] = []
-                for row in ok.itertuples(index=False):
-                    wide.append(
-                        {
-                            "id": make_doc_id(row.url_canon, fetched_ts),
-                            "url": row.url,
-                            "url_canon": row.url_canon,
-                            "url_hash": row.url_hash,
-                            "host": row.host,
-                            "src": row.src,
-                            "title": row.title,
-                            "meta": list((row.meta or {}).items()),
-                            "content": row.content,
-                            "html": row.html,
-                            "page_len": row.page_len,
-                            "text": row.text,
-                            "lang": row.lang,
-                            "status": row.status,
-                            "depth": row.depth,
-                            "fetched_ts": fetched_ts,
-                            "round": round_no,
-                        }
-                    )
-                if wide:
-                    table = pa.Table.from_pylist(wide, schema=arrow_schema)
+            for pdf in batches:
+                narrow, results = extract_batch(pdf, fetched_ts, round_no)
+                if results["id"]:
                     if writer is None:
                         writer = sink.open_writer(
                             TaskContext.get().partitionId(), arrow_schema
                         )
-                    writer.write_table(table)
-                yield pdf[narrow_cols]
+                    writer.write_table(
+                        pa.Table.from_pydict(results, schema=arrow_schema)
+                    )
+                yield narrow
             completed = True
         finally:
             if writer is not None:

@@ -29,8 +29,6 @@ shuffle.partitions ∈ {1, 8, 32}).
 
 from __future__ import annotations
 
-import os
-import time
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from datetime import datetime, timedelta
@@ -97,20 +95,6 @@ class CrawlConfig:
 
 
 FRONTIER_COLS = [f.name for f in schema.FRONTIER_SCHEMA.fields]
-
-
-def _timer():
-    """Per-step wall-clock prints, enabled by CRAWLKIT_TIMING=1."""
-    if not os.environ.get("CRAWLKIT_TIMING"):
-        return lambda label: None
-    t = [time.perf_counter()]
-
-    def tick(label: str) -> None:
-        now = time.perf_counter()
-        print(f"    [timing] {label}: {now - t[0]:.2f}s", flush=True)
-        t[0] = now
-
-    return tick
 
 
 def _as_frontier(df: DataFrame, round_no: int, status: str = "queued") -> DataFrame:
@@ -303,7 +287,6 @@ def run_round(
 ) -> dict[str, int] | None:
     """Execute one crawl round; returns stage metrics, or None when the
     frontier has no queued rows for this round (crawl finished)."""
-    tick = _timer()
     # Manifest-pruned frontier read: the delta committed at round k
     # holds ONLY rows queued for round k+1 (bootstrap's round-0 delta
     # feeds round 1; run_round's growth delta feeds round+1), so the
@@ -342,7 +325,6 @@ def run_round(
 
     queued = queued.persist()
     metrics: dict[str, int] = {"queued": queued.count()}
-    tick("read+queued.count")
 
     # Manifest-metadata short-circuits (no Spark jobs): round 1 of any
     # crawl has no stored results and no seen-set — skip the expiry
@@ -544,7 +526,6 @@ def run_round(
         F.sum(F.when(F.col("status") == "ok", 1).otherwise(0)).alias("rows_out"),
     ).collect()
     metrics["results"] = sum(int(r["rows_out"]) for r in part_rows)
-    tick("probe+politeness+extract+results.write")
     # The state writes are independent (distinct tables, all reading
     # only persisted frames), so submit them from worker threads: Spark
     # schedules concurrently-submitted jobs in parallel, overlapping
@@ -570,14 +551,12 @@ def run_round(
         for fut in write_futs:
             fut.result()
         metrics["selected"] = selected_fut.result()
-    tick("state.writes(parallel)")
 
     # Post-write row counts come from the staged parquet FOOTERS (no
     # Spark job): three fewer scheduling round-trips of per-round fixed
     # overhead vs recounting the frames.
     metrics["new_seen"] = wh.row_count("urlseen_exact", round_no)
     metrics["frontier_delta"] = wh.row_count("frontier", round_no)
-    tick("counts")
     all_rows = [
         (round_no, None, stage, None, int(v), None)
         for stage, v in metrics.items()
@@ -636,11 +615,15 @@ def run_crawl(
     else:
         # Resume: the stored filter layout is authoritative — adopt the
         # partition count pinned at bootstrap (a config drift here would
-        # silently probe the wrong partitions).  Legacy warehouses
-        # without a pinned value keep the caller's config.
+        # silently probe the wrong partitions).  Every bootstrap pins
+        # it, so a warehouse without one was not written by run_crawl.
         pinned = wh.latest_extra("n_bloom_partitions")
-        if pinned is not None:
-            cfg.n_bloom_partitions = int(pinned[1])
+        if pinned is None:
+            raise ValueError(
+                f"warehouse {cfg.warehouse} has committed rounds but no "
+                "pinned n_bloom_partitions; it cannot be resumed"
+            )
+        cfg.n_bloom_partitions = int(pinned[1])
     if not cfg.pages_buckets:
         # The on-disk bucket layout is authoritative, like the
         # seen-filter partition count: a resume adopts the pinned

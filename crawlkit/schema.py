@@ -142,22 +142,16 @@ LINKS_TYPE = T.ArrayType(
     )
 )
 
-# Output schema of the fetch+extract mapInPandas stage.
-EXTRACTED_SCHEMA = T.StructType(
+# Output schema of the fetch+extract mapInPandas stage
+# (fetch.fetch_extract_write): the wide results are written in-task, so
+# the round gets back only its link-growth and status bookkeeping.
+NARROW_EXTRACTED_SCHEMA = T.StructType(
     [
         T.StructField("url", T.StringType(), False),
         T.StructField("url_canon", T.StringType(), True),
         T.StructField("url_hash", T.LongType(), True),
         T.StructField("host", T.StringType(), True),
-        T.StructField("src", T.StringType(), True),
         T.StructField("status", T.StringType(), False),
-        T.StructField("title", T.StringType(), True),
-        T.StructField("meta", T.MapType(T.StringType(), T.StringType()), True),
-        T.StructField("content", T.BinaryType(), True),
-        T.StructField("html", T.StringType(), True),
-        T.StructField("page_len", T.LongType(), True),
-        T.StructField("text", T.StringType(), True),
-        T.StructField("lang", T.StringType(), True),
         T.StructField("links", LINKS_TYPE, True),
         T.StructField("depth", T.IntegerType(), False),
     ]

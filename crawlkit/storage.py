@@ -60,30 +60,18 @@ class ShardSink:
     def __init__(self, path: str) -> None:
         self.path = str(path)
 
-    def write(self, table, shard_id: int) -> None:
-        """Write one parquet shard from an executor task (pyarrow
-        Table in, zstd parquet out)."""
-        import pyarrow.parquet as pq
-
-        filesystem, root = _fs_and_root(self.path)
-        filesystem.create_dir(root, recursive=True)
-        with filesystem.open_output_stream(
-            f"{root}/part-{shard_id:05d}.parquet"
-        ) as out:
-            pq.write_table(table, out, compression="zstd")
-
     def open_writer(self, shard_id: int, schema) -> "ShardWriter":
-        """Incremental variant of :meth:`write`: same shard name and
-        overwrite-by-task-id protocol, but rows stream out in
+        """Open shard ``part-<shard_id>.parquet`` for one task: the
+        overwrite-by-task-id protocol above, with rows streamed out in
         byte-bounded row groups (``pyarrow.parquet.ParquetWriter``):
         Arrow batches accumulate in the writer until
-        ``CRAWLKIT_ROW_GROUP_BYTES`` (default 64 MiB) of uncompressed
-        bytes, then flush as ONE row group.  A task therefore holds
-        O(row-group target) wide bytes — never its whole shard, which
-        is gigabytes at the 10^10-URL design point — while the shard
-        keeps scan-efficient row groups instead of one tiny group per
-        1k-row Arrow batch (many small row groups inflate parquet
-        footer metadata and defeat row-group pruning at read time)."""
+        :data:`ROW_GROUP_BYTES` of uncompressed bytes, then flush as
+        ONE row group.  A task therefore holds O(row-group target) wide
+        bytes — never its whole shard, which is gigabytes at the
+        10^10-URL design point — while the shard keeps scan-efficient
+        row groups instead of one tiny group per 1k-row Arrow batch
+        (many small row groups inflate parquet footer metadata and
+        defeat row-group pruning at read time)."""
         import pyarrow.parquet as pq
 
         filesystem, root = _fs_and_root(self.path)
@@ -92,13 +80,11 @@ class ShardSink:
         stream = filesystem.open_output_stream(path)
         return ShardWriter(
             stream, pq.ParquetWriter(stream, schema, compression="zstd"),
-            filesystem=filesystem, fs_path=path,
+            filesystem, path,
         )
 
 
-ROW_GROUP_BYTES = int(
-    os.environ.get("CRAWLKIT_ROW_GROUP_BYTES", str(64 * 1024 * 1024))
-)
+ROW_GROUP_BYTES = 64 * 1024 * 1024
 
 
 class ShardWriter:
@@ -107,22 +93,18 @@ class ShardWriter:
     after close; a task that dies mid-write leaves a torn file that the
     next attempt of the SAME task id overwrites by name).
 
-    Batches buffer up to ``row_group_bytes`` of uncompressed Arrow
+    Batches buffer up to :data:`ROW_GROUP_BYTES` of uncompressed Arrow
     bytes before flushing as a single row group, bounding worker
     memory at O(target + one batch) while keeping row groups large
     enough that a 100 TB scan isn't dominated by per-group metadata
     and per-group decompression ramp."""
 
-    def __init__(self, stream, writer,
-                 row_group_bytes: int | None = None,
-                 filesystem=None, fs_path: str | None = None) -> None:
+    def __init__(self, stream, writer, filesystem, fs_path: str) -> None:
         self._stream = stream
         self._writer = writer
         self._fs = filesystem
         self._fs_path = fs_path
-        self._target = (
-            ROW_GROUP_BYTES if row_group_bytes is None else row_group_bytes
-        )
+        self._target = ROW_GROUP_BYTES
         self._buf: list = []
         self._buf_nbytes = 0
 
@@ -167,11 +149,10 @@ class ShardWriter:
                 pass
             self._stream.close()
         finally:
-            if self._fs is not None and self._fs_path is not None:
-                try:
-                    self._fs.delete_file(self._fs_path)
-                except FileNotFoundError:
-                    pass
+            try:
+                self._fs.delete_file(self._fs_path)
+            except FileNotFoundError:
+                pass
 
 
 class Warehouse:
@@ -256,14 +237,11 @@ class Warehouse:
         )
 
     # -- data -------------------------------------------------------------
-    def _round_dir(self, table: str, round_no: int) -> Path:
-        return self.root / table / f"round={round_no}"
-
     def round_path(self, table: str, round_no: int) -> Path:
         """Staging path for a round's data — written by the engine
         (including in-task pyarrow shard writers), invisible to readers
         until commit_round publishes it in the manifest."""
-        return self._round_dir(table, round_no)
+        return self.root / table / f"round={round_no}"
 
     def staging_sink(self, table: str, round_no: int) -> ShardSink:
         """Per-attempt :class:`ShardSink` for in-task shard writes.
@@ -274,17 +252,17 @@ class Warehouse:
         the committed round.  Safe because an uncommitted round is
         invisible to every reader — the wipe deletes only
         never-published data."""
-        filesystem, root = _fs_and_root(str(self._round_dir(table, round_no)))
+        filesystem, root = _fs_and_root(str(self.round_path(table, round_no)))
         try:
             filesystem.delete_dir_contents(root)
         except FileNotFoundError:
             pass
         filesystem.create_dir(root, recursive=True)
-        return ShardSink(str(self._round_dir(table, round_no)))
+        return ShardSink(str(self.round_path(table, round_no)))
 
     def write(self, df: DataFrame, table: str, round_no: int) -> None:
         """Stage a round's data (not visible until commit_round)."""
-        df.write.mode("overwrite").parquet(str(self._round_dir(table, round_no)))
+        df.write.mode("overwrite").parquet(str(self.round_path(table, round_no)))
 
     def row_count(self, table: str, round_no: int) -> int:
         """Row count of a staged round from parquet FOOTER metadata —
@@ -295,7 +273,7 @@ class Warehouse:
         import pyarrow.parquet as pq
 
         total = 0
-        d = self._round_dir(table, round_no)
+        d = self.round_path(table, round_no)
         for f in d.glob("*.parquet"):
             total += pq.ParquetFile(f).metadata.num_rows
         return total
@@ -390,9 +368,9 @@ class Warehouse:
         if rounds is None:
             rounds = self.committed_rounds(table)
         paths = [
-            str(self._round_dir(table, r))
+            str(self.round_path(table, r))
             for r in rounds
-            if self._round_dir(table, r).exists()
+            if self.round_path(table, r).exists()
         ]
         if not paths:
             return spark.createDataFrame([], schema)

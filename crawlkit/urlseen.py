@@ -25,7 +25,6 @@ the exact anti-join (over the tombstone-filtered set,
 from __future__ import annotations
 
 import math
-import os
 
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
@@ -44,9 +43,7 @@ FILL_REBUILD_RATIO = 0.6
 # LOUDLY (pre-commit, so the crawl resumes cleanly after resizing)
 # instead of shipping the oversized cell; size the partition count up
 # front with :func:`derive_n_partitions`.
-PARTITION_BYTE_BUDGET = int(
-    os.environ.get("CRAWLKIT_SEEN_PARTITION_BYTES", str(64 * 1024 * 1024))
-)
+PARTITION_BYTE_BUDGET = 64 * 1024 * 1024
 
 # Rebuilds size for 2x the partition's current items (amortized O(1)
 # inserts) — partition sizing must budget for that headroom.

@@ -8,19 +8,21 @@ The reference persists (api.ts:96-102 + model.ts:56-79,137-147):
 * save() rejects iff ``byteLength(page) > MAX_CELL_SIZE`` or
   ``content.length > MAX_CELL_SIZE`` (strictly greater).
 
-These are pure-Python tests over the extraction batch kernel — no
-Spark session needed.
+These are pure-Python tests over the kernel and the extraction batch
+function (``fetch.extract_batch``) — no Spark session needed.
 """
 
 from __future__ import annotations
 
+from datetime import datetime
+
 import pandas as pd
 import pytest
 
-from crawlkit import fetch
+from crawlkit import extract
 from crawlkit.doctree import doc_to_html
 from crawlkit.extract import _climb_content_region, extract_document
-from crawlkit.fetch import _extract_partition
+from crawlkit.fetch import extract_batch
 from crawlkit.htmlkit import find_all, outer_html, parse_html
 
 HTML = (
@@ -45,9 +47,13 @@ def _run_one(html: str) -> dict:
             }
         ]
     )
-    out = pd.concat(list(_extract_partition(iter([pdf]))))
-    assert len(out) == 1
-    return out.iloc[0].to_dict()
+    narrow, results = extract_batch(pdf, datetime(2026, 1, 1), 1)
+    assert len(narrow) == 1
+    row = narrow.iloc[0].to_dict()
+    # a stored row's results columns; none for a row the kernel rejects
+    assert len(results["id"]) == (row["status"] == "ok")
+    row.update({k: v[0] for k, v in results.items() if v})
+    return row
 
 
 def test_page_len_counts_trimmed_serialization_bytes():
@@ -82,11 +88,15 @@ def test_size_guard_is_page_or_content_strictly_greater(monkeypatch):
     bound = max(d.page_len, len(d.content_cbor))
     # boundary: both cells == MAX_CELL_SIZE is ALLOWED (reference
     # rejects strictly greater, model.ts:142-147)
-    monkeypatch.setattr(fetch, "MAX_CELL_SIZE", bound)
+    monkeypatch.setattr(extract, "MAX_CELL_SIZE", bound)
     assert _run_one(HTML)["status"] == "ok"
-    # one byte smaller: the larger cell outgrows the cap -> rejected
-    monkeypatch.setattr(fetch, "MAX_CELL_SIZE", bound - 1)
+    # one byte smaller: the larger cell outgrows the cap -> rejected,
+    # by the kernel itself, before it renders the canonical html
+    monkeypatch.setattr(extract, "MAX_CELL_SIZE", bound - 1)
     assert _run_one(HTML)["status"] == "too_large"
+    rejected = extract_document(HTML, URL)
+    assert rejected.status == "too_large"
+    assert rejected.canonical_html == ""
 
 
 def test_size_guard_fires_on_each_cell_alone(monkeypatch):
@@ -94,8 +104,11 @@ def test_size_guard_fires_on_each_cell_alone(monkeypatch):
     lo, hi = sorted((d.page_len, len(d.content_cbor)))
     assert lo != hi
     # cap between the two cells: the smaller passes, the larger trips
-    monkeypatch.setattr(fetch, "MAX_CELL_SIZE", lo)
+    monkeypatch.setattr(extract, "MAX_CELL_SIZE", lo)
     assert _run_one(HTML)["status"] == "too_large"
+    rejected = extract_document(HTML, URL)
+    assert rejected.status == "too_large"
+    assert rejected.canonical_html == ""
 
 
 def test_title_newlines_become_spaces_like_settitle():

@@ -172,7 +172,7 @@ def test_crash_resume_wipes_orphan_shards(spark, pages, synth_cfg,
     # the re-run's layout will never produce
     round2_dir = wh.round_path("results", 2)
     round2_dir.mkdir(parents=True, exist_ok=True)
-    from crawlkit.fetch import _results_arrow_schema
+    from pyspark.sql.pandas.types import to_arrow_schema
 
     orphan = pa.Table.from_pylist(
         [{"id": b"\x00" * 12, "url": "https://orphan.example/x",
@@ -181,7 +181,7 @@ def test_crash_resume_wipes_orphan_shards(spark, pages, synth_cfg,
           "title": "ORPHAN", "meta": [], "content": b"", "html": "",
           "page_len": 0, "text": "", "lang": "en", "status": "ok",
           "depth": 0, "fetched_ts": cfg.now, "round": 2}],
-        schema=_results_arrow_schema(),
+        schema=to_arrow_schema(schema.RESULTS_SCHEMA),
     )
     pq.write_table(orphan, round2_dir / "part-99999.parquet")
 
@@ -189,6 +189,27 @@ def test_crash_resume_wipes_orphan_shards(spark, pages, synth_cfg,
     res = wh.read(spark, "results", schema.RESULTS_SCHEMA)
     assert res.where(res.title == "ORPHAN").count() == 0
     assert wh.row_count("results", 1) == committed  # round 1 untouched
+
+
+def test_results_shards_carry_results_schema(ref_crawl):
+    """Every committed results shard is written in-task by pyarrow, not
+    by Spark, so its schema is checked here: exactly RESULTS_SCHEMA's
+    column names, types and nullability, in order."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_type
+
+    wh = Warehouse(ref_crawl[2])
+    shards = [
+        f for r in wh.committed_rounds("results")
+        for f in wh.round_path("results", r).glob("*.parquet")
+    ]
+    assert shards
+    want = [(f.name, f.dataType, f.nullable)
+            for f in schema.RESULTS_SCHEMA.fields]
+    for f in shards:
+        got = [(fld.name, from_arrow_type(fld.type), fld.nullable)
+               for fld in pq.read_schema(f)]
+        assert got == want
 
 
 def test_partition_count_invariance(spark, pages, synth_cfg, tmp_path_factory):

@@ -26,10 +26,17 @@ def _shard(rows):
     )
 
 
+def _write_shard(sink, table, shard_id):
+    """One task's whole shard through the sink's one entry point."""
+    w = sink.open_writer(shard_id, table.schema)
+    w.write_table(table)
+    w.close()
+
+
 def test_staged_shards_invisible_until_commit(spark, tmp_warehouse):
     wh = Warehouse(tmp_warehouse)
     sink = wh.staging_sink("urlseen_exact", 1)
-    sink.write(_shard([(1, "https://a.example/")]), 0)
+    _write_shard(sink, _shard([(1, "https://a.example/")]), 0)
     # staged but uncommitted: readers see nothing
     assert (
         wh.read(spark, "urlseen_exact", schema.URLSEEN_EXACT_SCHEMA).count()
@@ -49,11 +56,11 @@ def test_crashed_attempt_leaves_no_visible_orphans(spark, tmp_warehouse):
     commits.  Readers must see exactly attempt 2's rows."""
     wh = Warehouse(tmp_warehouse)
     crashed = wh.staging_sink("urlseen_exact", 1)
-    crashed.write(_shard([(1, "https://old.example/a")]), 0)
-    crashed.write(_shard([(2, "https://old.example/b")]), 1)
+    _write_shard(crashed, _shard([(1, "https://old.example/a")]), 0)
+    _write_shard(crashed, _shard([(2, "https://old.example/b")]), 1)
 
     retry = wh.staging_sink("urlseen_exact", 1)
-    retry.write(_shard([(3, "https://new.example/a")]), 0)
+    _write_shard(retry, _shard([(3, "https://new.example/a")]), 0)
     wh.commit_round(1, {"urlseen_exact": wh.row_count("urlseen_exact", 1)})
 
     rows = {
@@ -70,8 +77,8 @@ def test_task_retry_overwrites_own_shard(spark, tmp_warehouse):
     duplicated."""
     wh = Warehouse(tmp_warehouse)
     sink = wh.staging_sink("urlseen_exact", 1)
-    sink.write(_shard([(1, "https://try1.example/")]), 0)
-    sink.write(_shard([(1, "https://try2.example/")]), 0)  # retry wins
+    _write_shard(sink, _shard([(1, "https://try1.example/")]), 0)
+    _write_shard(sink, _shard([(1, "https://try2.example/")]), 0)  # retry wins
     wh.commit_round(1, {"urlseen_exact": wh.row_count("urlseen_exact", 1)})
     rows = [
         r["url_canon"]
@@ -86,8 +93,7 @@ def test_incremental_writer_streams_row_groups(spark, tmp_warehouse):
     """ShardSink.open_writer: multiple Arrow batches land in ONE shard
     with byte-bounded row groups (small batches COALESCE into one
     group; a sub-target buffer flushes at close), same overwrite-by-
-    task-id retry protocol as the one-shot write, invisible until
-    commit."""
+    task-id retry protocol, invisible until commit."""
     import pyarrow.parquet as pq
 
     wh = Warehouse(tmp_warehouse)
@@ -132,7 +138,7 @@ def test_aborted_writer_leaves_no_shard(tmp_warehouse):
     """A task whose generator stops early must NOT leave a valid-
     looking truncated shard: abort() deletes the partial file, so 'a
     shard exists iff its task completed' holds for the incremental
-    writer exactly as it did for the one-shot write."""
+    writer."""
     wh = Warehouse(tmp_warehouse)
     sink = wh.staging_sink("urlseen_exact", 1)
     w = sink.open_writer(0, _shard([]).schema)

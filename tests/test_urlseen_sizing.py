@@ -11,6 +11,8 @@ manifest at bootstrap so resumes can't drift, and (c) FAILS LOUDLY
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from crawlkit import schema
@@ -99,3 +101,31 @@ def test_resume_adopts_pinned_partition_count(spark, pages, ref_crawl,
                           max_depth=src_cfg.max_depth, salt=src_cfg.salt)
     run_crawl(spark, drifted, pages, max_rounds=1)
     assert drifted.n_bloom_partitions == src_cfg.n_bloom_partitions
+
+
+def test_resume_without_pinned_partition_count_raises(spark, pages, ref_crawl,
+                                                      tmp_path_factory):
+    """Every bootstrap pins n_bloom_partitions, so a warehouse whose
+    manifest lacks it cannot be resumed: run_crawl raises, naming the
+    warehouse, before any round runs."""
+    import json
+
+    from conftest import copy_warehouse
+    from crawlkit.rounds import CrawlConfig, run_crawl
+    from crawlkit.storage import Warehouse
+
+    src_cfg, _, wh_dir = ref_crawl
+    d = copy_warehouse(wh_dir, tmp_path_factory, "wh-unpinned")
+    manifest_path = Warehouse(d)._manifest_path
+    manifest = json.loads(manifest_path.read_text())
+    for entry in manifest["rounds"].values():
+        entry.pop("n_bloom_partitions", None)
+    manifest_path.write_text(json.dumps(manifest))
+    last = manifest["last_round"]
+
+    cfg = CrawlConfig(warehouse=d, n_bloom_partitions=4,
+                      max_depth=src_cfg.max_depth, salt=src_cfg.salt)
+    with pytest.raises(ValueError, match=re.escape(d)):
+        run_crawl(spark, cfg, pages, max_rounds=1)
+    assert Warehouse(d).last_committed_round() == last
+    assert not Warehouse(d).round_path("results", last + 1).exists()

@@ -35,10 +35,7 @@ def main() -> None:
         total = 0
         for url, html in pages:
             doc = extract_document(html, url)
-            # the storage path renders + trims the canonical html per
-            # stored row (fetch._extract_partition) — pay it here so
-            # the profile matches the shipped hot path
-            total += len(doc.text) + len(doc.canonical_html.strip())
+            total += len(doc.text) + len(doc.canonical_html)
         return total
 
     run()  # warm
